@@ -469,8 +469,11 @@ class Dataset:
                 **kw,
             )
         else:
+            # the state scan is handed over unbuilt: a saved-index ANN
+            # search never reads it, and building it lists the base
+            # directory through several Py4J calls on every search
             plan, res = knn(
-                self.state(),
+                self.state,
                 queries,
                 k,
                 space=self.meta.space,

@@ -3503,9 +3503,9 @@ def search_index_path(
 
     `search_index` ships the index DataFrame through a shuffle + Arrow
     conversion on EVERY call — at 784-d that transfer dwarfs the actual
-    graph walk (~10× the kernel time).  Here the plan parallelizes over
-    *partition ids* (one row per graph partition, round-robin → one task
-    each); every task column-reads its own partition's parquet directly
+    graph walk (~10× the kernel time).  Here the plan is a JVM range over
+    *(partition id, query chunk)* work items, one task each; every task
+    column-reads its own partition's parquet directly
     and caches the reconstructed graph in the reused python worker, so a
     warm serving workload pays ZERO index bytes per query batch — the
     same resident-graph contract the reference's nodes have
@@ -3530,6 +3530,7 @@ def search_index_path(
     import os as _os
 
     from anndb_spark.sources import fsutil
+    from anndb_spark.utils import task_plan
 
     cfg = config or get_index_config(load_index(spark, path)) or HnswConfig()
     ef = max(ef or cfg.ef, k)
@@ -3649,18 +3650,14 @@ def search_index_path(
             # spark.sql.execution.arrow.localRelationThreshold the JVM
             # builds a LocalRelation directly from the batches
             return spark.createDataFrame(tbl, schema=out_schema)
-    plan_rows = []
+    items = []
     for p in pids:
         n_chunks = max(1, -(-per_pid[p] // queries_per_task))
-        plan_rows.extend((p, c) for c in range(n_chunks))
-    # one plan row per partition, NO repartition: createDataFrame +
-    # repartition is a 2-stage shuffle that cost ~0.2 s of fixed wall
-    # per search call (measured); parallelize with numSlices places
-    # each (pid, chunk) row in its own partition shuffle-free
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan_rows, max(len(plan_rows), 1)),
-        "pid INT, chunk INT",
-    )
+        items.extend((p, c) for c in range(n_chunks))
+    # one (pid, chunk) work item per task, looked up by range id: a
+    # JVM range is shuffle-free and starts no Python worker of its own
+    # (utils.task_plan)
+    plan = task_plan(spark, len(items), max(len(items), 1))
     qpt = queries_per_task
     # the query batch travels as a BROADCAST, not in the task closure:
     # a closure is serialized into every task description, so a 10k×784
@@ -3668,20 +3665,16 @@ def search_index_path(
     # tasks → ~1 GB); the broadcast ships once per executor and python
     # workers read it from the local block file (measured: the warm
     # single-graph leg was spending most of its wall on closure bytes)
-    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_pid))
+    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_pid, items))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qid_arr, qmat, by_pid = bq.value
+        qid_arr, qmat, by_pid, items = bq.value
         # drain the input stream BEFORE yielding: a pandas-UDF that
         # yields interleaved with unconsumed input gets its python
         # worker KILLED by the runner instead of reused (measured —
         # worker pids churn every job), which destroys the
         # worker-resident graph cache this whole path is built around
-        work = [
-            (pid, chunk)
-            for b in batches
-            for pid, chunk in zip(b["pid"].tolist(), b["chunk"].tolist())
-        ]
+        work = [items[i] for b in batches for i in b["id"].tolist()]
         for pid, chunk in work:
             if by_pid is None:
                 qsel = list(range(chunk * qpt, min((chunk + 1) * qpt, n_q)))

@@ -417,7 +417,8 @@ def search_ivf_path(
     Same result contract as `search_ivf` (float64 scores, ascending
     (score, id), rank 1..k — pytest-identical), different physical plan:
     queries are routed on the driver against the tiny centroid matrix;
-    the plan holds one row per (probed cluster, query-chunk); each task
+    the plan is a JVM range over (probed cluster, query-chunk) work
+    items, one task each; each task
     column-reads its own cluster's parquet directly (unprobed cluster
     directories never enter the plan) and GEMM-scores its chunk against
     the worker-cached cluster matrix.  A warm serving workload pays zero
@@ -436,6 +437,7 @@ def search_ivf_path(
         for p in ps:
             by_cid.setdefault(int(p), []).append(qi)
     from anndb_spark.sources import fsutil
+    from anndb_spark.utils import task_plan
 
     # discovery + footer read through pyarrow.fs (plain path, file://,
     # s3://, hdfs:// — no shared-local-FS assumption, ADVICE r4)
@@ -471,38 +473,27 @@ def search_ivf_path(
         target_tasks = max(len(cids), par // 2, 1)
         queries_per_task = max(64, -(-total // target_tasks))
     qpt = queries_per_task
-    plan_rows = []
+    items = []
     for c in cids:
         n_chunks = max(1, -(-len(by_cid[c]) // qpt))
-        plan_rows.extend((c, i) for i in range(n_chunks))
-    # shuffle-free plan: one (cid, chunk) row per partition via
-    # parallelize numSlices (createDataFrame + repartition costs a
-    # 2-stage shuffle of fixed wall per call — see hnsw serving plan)
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            plan_rows or [(-1, 0)], max(len(plan_rows), 1)
-        ),
-        "cid INT, chunk INT",
-    )
-    # query batch as a broadcast, not a per-task closure payload (see
-    # hnsw.search_index_path — a closure is serialized into every task)
-    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_cid))
+        items.extend((c, i) for i in range(n_chunks))
+    # shuffle-free plan: one (cid, chunk) work item per task, looked up
+    # by range id (utils.task_plan, see hnsw.search_index_path)
+    plan = task_plan(spark, len(items), max(len(items), 1))
+    # query batch and work list as a broadcast, not a per-task closure
+    # payload (see hnsw.search_index_path — a closure is serialized
+    # into every task)
+    bq = spark.sparkContext.broadcast((qid_arr, qmat, by_cid, items))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from anndb_spark.sources import fsutil as _fsu
 
-        qid_arr, qmat, by_cid = bq.value
+        qid_arr, qmat, by_cid, items = bq.value
         # drain before yielding — interleaved yield gets the python
         # worker killed instead of reused, losing the resident cluster
         # cache (see hnsw.search_index_path)
-        work = [
-            (cid, chunk)
-            for b in batches
-            for cid, chunk in zip(b["cid"].tolist(), b["chunk"].tolist())
-        ]
+        work = [items[i] for b in batches for i in b["id"].tolist()]
         for cid, chunk in work:
-            if cid < 0:
-                continue
             qsel = by_cid.get(int(cid), [])[chunk * qpt : (chunk + 1) * qpt]
             if not qsel:
                 continue

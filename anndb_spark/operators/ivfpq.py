@@ -18,8 +18,9 @@ Spark shape (all pieces reused from `operators/ivf.py` / `pq.py`):
                       ``books/`` (`pq.save_pq`, config header),
                       ``codes/cluster_id=*/`` (hive-partitioned codes).
 - ``search_ivfpq``  — serving shape: queries route on the driver
-                      against the tiny centroid matrix; the plan holds
-                      one row per (probed cell, query chunk); each task
+                      against the tiny centroid matrix; the plan is a
+                      JVM range over (probed cell, query chunk) work
+                      items; each task
                       reads ONLY its cell's codes (worker-cached, keyed
                       by content fingerprint), builds the per-cell
                       residual LUTs (q − c), ADC-scores, and emits a
@@ -48,6 +49,7 @@ north-star extension built on public algorithms.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
@@ -279,24 +281,34 @@ def load_ivfpq_config(spark, path: str) -> tuple[np.ndarray, np.ndarray, dict]:
     return cent, books, meta
 
 
-# worker-resident cell-codes cache (ids, codes matrix), byte-capped LRU
+# worker-resident cell-codes cache (ids, codes matrix): byte-capped LRU
+# under the worker graph-cache budget, ANNDB_GRAPH_CACHE_BYTES (1 GiB)
 _CODES_CACHE: dict = {}
-_CODES_CACHE_MAX = 64
+_CODES_CACHE_MAX_BYTES = int(
+    os.environ.get("ANNDB_GRAPH_CACHE_BYTES", str(1 << 30))
+)
 
 
 def _codes_get(key):
     v = _CODES_CACHE.pop(key, None)
-    if v is not None:
-        _CODES_CACHE[key] = v
-    return v
+    if v is None:
+        return None
+    _CODES_CACHE[key] = v  # re-insert → LRU order
+    return v[:2]
 
 
 def _codes_put(key, ids, C):
     if key is None:
         return
-    _CODES_CACHE[key] = (ids, C)
-    while len(_CODES_CACHE) > _CODES_CACHE_MAX:
-        _CODES_CACHE.pop(next(iter(_CODES_CACHE)))
+    # string ids are object arrays: count ~64 B each (pointer + small
+    # str), as the IVF cluster cache does
+    nb = C.nbytes + (64 if ids.dtype == object else ids.itemsize) * len(ids)
+    if nb > _CODES_CACHE_MAX_BYTES:
+        return
+    total = nb + sum(v[2] for v in _CODES_CACHE.values())
+    while total > _CODES_CACHE_MAX_BYTES and _CODES_CACHE:
+        total -= _CODES_CACHE.pop(next(iter(_CODES_CACHE)))[2]
+    _CODES_CACHE[key] = (ids, C, nb)
 
 
 def search_ivfpq(
@@ -317,7 +329,8 @@ def search_ivfpq(
     """Serving-shape IVFADC top-k → (query_id, rank, id, score).
 
     Driver routes every query to its nprobe nearest cells; the plan is
-    (cell, query-chunk) rows via shuffle-free ``parallelize``; each task
+    a shuffle-free JVM range over (cell, query-chunk) work items
+    (`utils.task_plan`); each task
     reads only its cell's codes directory through ``pyarrow.fs``
     (worker-cached, content-fingerprint keyed) and scores its chunk
     with per-cell residual LUTs, folding a per-query top-n in bounded
@@ -330,6 +343,7 @@ def search_ivfpq(
     from pyspark.sql import Window
 
     from anndb_spark.sources import fsutil
+    from anndb_spark.utils import task_plan
 
     meta: dict = {}
     if centroids is None or codebooks is None:
@@ -374,36 +388,27 @@ def search_ivfpq(
         target_tasks = max(len(cids), par // 2, 1)
         queries_per_task = max(64, -(-total // target_tasks))
     qpt = queries_per_task
-    plan_rows = []
+    items = []
     for c in cids:
         n_chunks = max(1, -(-len(by_cid[c]) // qpt))
-        plan_rows.extend((c, i) for i in range(n_chunks))
+        items.extend((c, i) for i in range(n_chunks))
     # ``cells_per_task`` packs several (cell, chunk) work items into one
     # task (the scorer loops over every item in its partition anyway).
     # 1 = maximal parallelism, the right default when cells are large;
     # raise it for small-cell indexes where per-task fixed costs would
     # otherwise dominate (e.g. 1M rows / 1024 cells ≈ 1k rows per cell:
     # scheduling 1024 tiny tasks costs more than the ADC math).
-    n_slices = max(1, -(-len(plan_rows) // max(cells_per_task, 1)))
-    plan = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan_rows or [(-1, 0)], n_slices),
-        "cid INT, chunk INT",
-    )
-    bq = spark.sparkContext.broadcast((qid_arr, Q, by_cid))
+    n_slices = max(1, -(-len(items) // max(cells_per_task, 1)))
+    plan = task_plan(spark, len(items), n_slices)
+    bq = spark.sparkContext.broadcast((qid_arr, Q, by_cid, items))
     bn2 = np.einsum("mkd,mkd->mk", books, books, dtype=np.float32)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from anndb_spark.sources import fsutil as _fsu
 
-        qid_arr, Qv, by_cid = bq.value
-        work = [
-            (cid, chunk)
-            for b in batches
-            for cid, chunk in zip(b["cid"].tolist(), b["chunk"].tolist())
-        ]
+        qid_arr, Qv, by_cid, items = bq.value
+        work = [items[i] for b in batches for i in b["id"].tolist()]
         for cid, chunk in work:
-            if cid < 0:
-                continue
             qsel = by_cid.get(int(cid), [])[chunk * qpt : (chunk + 1) * qpt]
             if not qsel:
                 continue

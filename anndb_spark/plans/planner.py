@@ -23,16 +23,17 @@ three paths is identical: (query_id, rank, id, score) ascending.
 
 from __future__ import annotations
 
-from typing import Sequence
+from functools import cache
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EXACT_MAX_ROWS_DEFAULT = 10_000_000
 
 
 def knn(
-    vectors: DataFrame,
+    vectors: DataFrame | Callable[[], DataFrame],
     queries: Sequence[tuple],
     k: int,
     space: str = "euclidean",
@@ -62,6 +63,10 @@ def knn(
     worker-resident graph cache keyed by ``cache_token``) — the hot-path
     layout; an in-memory ``index`` DataFrame uses the shuffle-based
     `hnsw.search_index`.
+
+    ``vectors`` may be a zero-argument callable returning the table; it
+    is then built only on the paths that read it, so a saved-index ANN
+    search never plans a scan it does not run.
     """
     from anndb_spark.operators.hnsw import search_index, search_index_path
     from anndb_spark.operators.ivf import search_ivf
@@ -73,6 +78,8 @@ def knn(
         raise ValueError("mode='ann' requires a materialized index (DataFrame or path)")
     if mode == "ivf" and centroids is None:
         raise ValueError("mode='ivf' requires trained centroids")
+    lazy = not isinstance(vectors, DataFrame)
+    table = cache(vectors) if lazy else (lambda: vectors)
     if mode == "pq":
         # trained-compression path: ADC scan over the codes table +
         # exact rerank against the float table (never chosen by auto —
@@ -94,14 +101,14 @@ def knn(
             pq_books,
             k,
             space=space,
-            rerank_with=vectors.select("id", "vector"),
+            rerank_with=table().select("id", "vector"),
         )
 
     have_index = index is not None or index_path is not None
     if mode == "auto":
         n = approx_row_count
         if n is None and (have_index or centroids is not None):
-            n = vectors.count()
+            n = table().count()
         if have_index and (n or 0) > exact_max_rows:
             mode = "ann"
         elif centroids is not None and (n or 0) > exact_max_rows:
@@ -109,28 +116,29 @@ def knn(
         else:
             mode = "exact"
 
-    spark = vectors.sparkSession
     qitems = [(str(qid), [float(x) for x in vec]) for qid, vec in queries]
     if mode == "ann":
         from anndb_spark.operators.hnsw import HnswConfig
 
         if index_path is not None:
+            spark = SparkSession.active() if lazy else vectors.sparkSession
             return "ann", search_index_path(
                 spark, index_path, qitems, k, ef=ef,
                 config=HnswConfig(space=space), cache_token=cache_token,
             )
         return "ann", search_index(
-            index, vectors, qitems, k, ef=ef, config=HnswConfig(space=space)
+            index, table(), qitems, k, ef=ef, config=HnswConfig(space=space)
         )
     from anndb_spark.utils import literal_df
 
     qdf = literal_df(
-        spark, qitems, "query_id STRING, query_vector ARRAY<DOUBLE>"
+        table().sparkSession, qitems,
+        "query_id STRING, query_vector ARRAY<DOUBLE>",
     )
     if mode == "exact":
-        return "exact", knn_exact(vectors, qdf, k, space=space)
+        return "exact", knn_exact(table(), qdf, k, space=space)
     return "ivf", search_ivf(
-        vectors, qdf, k, centroids, nprobe=nprobe, space=space
+        table(), qdf, k, centroids, nprobe=nprobe, space=space
     )
 
 

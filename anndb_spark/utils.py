@@ -56,15 +56,14 @@ def plan_size_over_broadcast_threshold(df: DataFrame) -> bool:
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        thr = df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
+        # Spark's own parsed byte value: it accepts every unit Spark
+        # does ('10MB', '1g', '64m', plain bytes), which a Python
+        # re-parse of the raw string did not
+        thr_bytes = int(
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .autoBroadcastJoinThreshold()
         )
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-        t = thr.strip().lower()
-        if t and t[-1] in mult:
-            thr_bytes = int(t[:-1]) * mult[t[-1]]
-        else:
-            thr_bytes = int(t)
         if thr_bytes < 0:
             # auto-broadcast disabled: the table will never broadcast
             # un-hinted, so the bounded side must carry the hint
@@ -73,6 +72,22 @@ def plan_size_over_broadcast_threshold(df: DataFrame) -> bool:
     except Exception:
         # estimate unavailable: assume big (the scale-safe direction)
         return True
+
+
+def task_plan(spark, n_items: int, n_slices: int) -> DataFrame:
+    """``spark.range(0, n_items, 1, n_slices)``: the input of a serving
+    plan whose tasks look their work items up by range id in a
+    broadcast list.
+
+    A JVM ``Range`` leaf, never ``createDataFrame(parallelize(rows))``:
+    a DataFrame over a parallelized Python RDD is read through a
+    PythonRDD, so every task first starts a Python worker just to
+    unpickle its plan rows before the ``mapInPandas`` worker starts
+    (~0.15-0.2 s of worker set-up per task; README, "Performance note:
+    the per-task floor").  Range splits ids into slices exactly as
+    ``parallelize`` splits a list, so task ``i`` holds the same items
+    either way."""
+    return spark.range(0, n_items, 1, n_slices)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -112,6 +112,26 @@ def test_ann_search_after_build_index(spark, db):
     assert len(set(ids) & want) >= 9
 
 
+def test_ann_search_on_saved_index_never_builds_state(spark, db, monkeypatch):
+    """A saved-index ANN search reads only the index: the state-table
+    scan is built on the paths that read it, not on every search."""
+    from anndb_spark.dataset import Dataset
+
+    ds = db.create_dataset("nostate", dimension=8, partition_count=2)
+    rows, df = _vec_rows(spark, 80, 8, seed=5)
+    ds.insert(df)
+    ds.compact()
+    ds.build_index()
+    want = ds.search(rows[4][1], 5, mode="ann").orderBy("rank").collect()
+
+    def boom(self):
+        raise AssertionError("state table built for a saved-index search")
+
+    monkeypatch.setattr(Dataset, "state", boom)
+    got = ds.search(rows[4][1], 5, mode="ann").orderBy("rank").collect()
+    assert got == want and got[0]["id"] == rows[4][0]
+
+
 def test_search_with_metadata(spark, db):
     """with_metadata returns the full SearchResultItem contract
     (protobuf/proto/search.proto:22-26): id, metadata, score."""

@@ -500,3 +500,125 @@ def test_bm25_indexed_batch_plan_shape(spark, tmp_path):
     plan_w = _plan(wide)
     pf_w = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan_w)
     assert not any("bucket" in f and " IN " in f for f in pf_w), pf_w
+
+
+@pytest.mark.parametrize(
+    "conf, thr_bytes",
+    [
+        ("10MB", 10 << 20),
+        ("1GB", 1 << 30),
+        ("64m", 64 << 20),
+        ("10485760", 10485760),
+    ],
+)
+def test_broadcast_threshold_accepts_spark_units(spark, conf, thr_bytes):
+    """Every unit spelling Spark accepts reads as Spark's byte value.
+    A ``range`` of n rows is estimated at exactly 8·n bytes, so the
+    rows either side of the threshold pin the parsed value."""
+    from anndb_spark.utils import plan_size_over_broadcast_threshold as over
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, conf)
+    try:
+        assert not over(spark.range(10))
+        assert not over(spark.range(thr_bytes // 8))
+        assert over(spark.range(thr_bytes // 8 + 1))
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_broadcast_threshold_disabled_reads_as_over(spark):
+    from anndb_spark.utils import plan_size_over_broadcast_threshold as over
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert over(spark.range(10))
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="module")
+def serving_artifacts(spark, tmp_path_factory):
+    """A 4-partition saved HNSW index, an IVF cluster table and an IVFPQ
+    artifact over the same 500 vectors, plus 8 queries."""
+    import numpy as np
+
+    from anndb_spark.operators.hnsw import HnswConfig, build_index, save_index
+    from anndb_spark.operators.ivf import (
+        assign_clusters,
+        save_assigned,
+        train_centroids,
+    )
+    from anndb_spark.operators.ivfpq import build_ivfpq
+
+    root = tmp_path_factory.mktemp("serving")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.col("vec_id").cast("string").alias("id"),
+        F.col("embedding").alias("vector"),
+        F.pmod(F.col("vec_id"), F.lit(4)).cast("int").alias("partition_id"),
+    )
+    cfg = HnswConfig(m=8, ef_construction=40)
+    hnsw_path = str(root / "hnsw")
+    save_index(build_index(emb, cfg), hnsw_path)
+    vecs = emb.select("id", "vector")
+    cent = train_centroids(vecs, 4, sample_n=500)
+    ivf_path = str(root / "ivf")
+    save_assigned(assign_clusters(vecs, cent), ivf_path)
+    ivfpq_path = str(root / "ivfpq")
+    build_ivfpq(vecs, ivfpq_path, n_cells=4, m=4, n_centroids=16, sample_n=500)
+    rng = np.random.default_rng(7)
+    queries = [(str(i), rng.normal(0, 1, 64).tolist()) for i in range(8)]
+    return cfg, hnsw_path, cent, ivf_path, ivfpq_path, queries
+
+
+def test_serving_plans_start_from_range(spark, serving_artifacts):
+    """Serving searches read their work items from a JVM ``Range``, not
+    from a parallelized Python RDD (which costs every task an extra
+    Python worker)."""
+    from anndb_spark.operators.hnsw import search_index_path
+    from anndb_spark.operators.ivf import search_ivf_path
+    from anndb_spark.operators.ivfpq import search_ivfpq
+
+    cfg, hnsw_path, cent, ivf_path, ivfpq_path, queries = serving_artifacts
+    for res in (
+        search_index_path(spark, hnsw_path, queries, 5, config=cfg),
+        search_ivf_path(spark, ivf_path, queries, 5, cent, nprobe=2),
+        search_ivfpq(spark, ivfpq_path, queries, k=5, nprobe=2),
+    ):
+        plan = _plan(res)
+        assert "Range (" in plan
+        assert "ExistingRDD" not in plan
+
+
+def test_serving_multi_item_tasks_match_default_layout(
+    spark, serving_artifacts
+):
+    """Range id → work item lookup when a partition has several query
+    chunks (HNSW) and when one task holds several items (IVFPQ): the
+    rows equal the default one-item-per-task layout's."""
+    from anndb_spark.operators.hnsw import search_index_path
+    from anndb_spark.operators.ivfpq import search_ivfpq
+
+    cfg, hnsw_path, _, _, ivfpq_path, queries = serving_artifacts
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want = rows(search_index_path(spark, hnsw_path, queries, 5, config=cfg))
+    got = rows(
+        search_index_path(
+            spark, hnsw_path, queries, 5, config=cfg, queries_per_task=3
+        )
+    )
+    assert got == want and len(want) == 8 * 5
+
+    want = rows(search_ivfpq(spark, ivfpq_path, queries, k=5, nprobe=3))
+    got = rows(
+        search_ivfpq(
+            spark, ivfpq_path, queries, k=5, nprobe=3, cells_per_task=2
+        )
+    )
+    assert got == want and len(want) == 8 * 5
