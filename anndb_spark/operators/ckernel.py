@@ -212,6 +212,16 @@ static inline float doth(const uint16_t* restrict a,
 int hnsw_has_f16(void) { return 0; }
 #endif
 
+/* A NaN distance (a NaN or inf vector component) becomes +inf, so such
+   a row ranks after every finite one instead of comparing undefined in
+   the heaps (the euclidean clamp below used to turn it into 0, rank 1).
+   Tested on the bits: -ffast-math folds d != d to false. */
+static inline float nan_inf(float d) {
+    uint32_t u;
+    memcpy(&u, &d, sizeof u);
+    return (u & 0x7fffffffu) > 0x7f800000u ? INFINITY : d;
+}
+
 /* f16-row distance (euclidean SQUARED / cosine); norms are the
    f32-derived tables — the ~1e-3 relative blur matches the python
    build's f16 selection shadow (recall unchanged, measured there). */
@@ -220,12 +230,12 @@ static inline float dist_one_h(int32_t space, const uint16_t* vh,
                                float vn, float qn2, float qn) {
     float dot = doth(vh, q, dim);
     if (space == 0) {
-        float d = vn2 - 2.0f * dot + qn2;
+        float d = nan_inf(vn2 - 2.0f * dot + qn2);
         return d > 0.f ? d : 0.f;
     }
     float den = vn * qn;
     if (den <= 0.f) den = 1e-30f;
-    return fabsf(1.0f - dot / den);
+    return nan_inf(fabsf(1.0f - dot / den));
 }
 #if defined(__x86_64__) && defined(__AVX512F__)
 static inline float l1f(const float* restrict a, const float* restrict b,
@@ -263,15 +273,15 @@ static inline float l1f(const float* restrict a, const float* restrict b,
 static inline float dist_one(int32_t space, const float* v, const float* q,
                              int32_t dim, float vn2, float vn,
                              float qn2, float qn) {
-    if (space == 2) return l1f(v, q, dim);
+    if (space == 2) return nan_inf(l1f(v, q, dim));
     float dot = dotf(v, q, dim);
     if (space == 0) {
-        float d = vn2 - 2.0f * dot + qn2;
+        float d = nan_inf(vn2 - 2.0f * dot + qn2);
         return d > 0.f ? d : 0.f;
     }
     float den = vn * qn;
     if (den <= 0.f) den = 1e-30f;
-    return fabsf(1.0f - dot / den);
+    return nan_inf(fabsf(1.0f - dot / den));
 }
 
 /* cmp for the final ascending sort: (d, id) -- id tiebreak keeps the
@@ -941,8 +951,8 @@ def _compile() -> str | None:
     that subnormals exist and started failing in any test session that
     had touched the HNSW kernel first.  -ffast-math at COMPILE time
     only affects this kernel's own codegen (safe here: FLT_MAX
-    sentinels, no NaN/Inf reliance); the link step gets no math flags,
-    so no constructor is injected."""
+    sentinels, and `nan_inf` tests NaN on its bits); the link step
+    gets no math flags, so no constructor is injected."""
     h = hashlib.sha1(
         (_C_SRC + _BUILD_TAG).encode()
     ).hexdigest()[:16]

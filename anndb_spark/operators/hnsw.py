@@ -45,6 +45,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anndb_spark.operators._scratch import (
+    argpart_rows,
+    cache_get,
+    cache_put,
+    scratch_mat,
+)
+
 # ---------------------------------------------------------------------------
 # In-memory NumPy HNSW (per-partition kernel)
 # ---------------------------------------------------------------------------
@@ -98,17 +105,33 @@ def _dist_many(space: str, mat: np.ndarray, q: np.ndarray) -> np.ndarray:
     return np.abs(np.float32(1.0) - dot / (nm * nq))
 
 
-def _ck_rows(res, inv=None):
-    """(ids, dists) arrays from the C kernel → the kernel's list-of-
-    [(dist, id), ...] contract (−1 slots dropped, optional unsort)."""
-    ids, ds = res
-    out = [
+def _hit_lists(ids: np.ndarray, ds: np.ndarray) -> list[list[tuple[float, int]]]:
+    """(ids, dists) kernel rows → per-row [(dist, id), ...] lists of the
+    real hits (−1 slots dropped): the build's neighbor-selection input."""
+    return [
         [(d, i) for d, i in zip(drow, irow) if i >= 0]
         for drow, irow in zip(ds.tolist(), ids.tolist())
     ]
-    if inv is not None:
-        out = [out[inv[i]] for i in range(len(out))]
-    return out
+
+
+def _mask_misses(ids: np.ndarray, ds: np.ndarray):
+    """The batch kernels' result contract, applied in place: a slot
+    without a real hit (a −1 pad, or a non-finite distance) reads
+    −1 / +inf.  Rows are sorted ascending, so misses stay a suffix."""
+    miss = (ids < 0) | ~np.isfinite(ds)
+    ids[miss] = -1
+    ds[miss] = np.inf
+    return ids, ds
+
+
+def _mark_visited(visited: np.ndarray, a: np.ndarray, nb: np.ndarray, fresh: np.ndarray) -> None:
+    """visited[a[i], nb[i, j]] = True wherever fresh[i, j].  Written
+    through the fresh slots only: a fancy ``|=`` over the whole frontier
+    repeats column 0 for every −1 pad slot, and the pad's later False
+    write undid node 0's mark — node 0 then re-entered the beam and could
+    fill several result slots."""
+    r, c = np.nonzero(fresh)
+    visited[a[r], nb[r, c]] = True
 
 
 # fork-build plumbing: children inherit the pre-wave graph via fork COW
@@ -122,7 +145,7 @@ _BUILD_FORK_GEMM = None
 
 def _build_fork_cand_work(slice_ids: list[int]):
     g, v, efc = _BUILD_FORK_GRAPH
-    res = g.search_fast_batch(v[slice_ids], k=efc, ef=efc)
+    res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
     return [
         (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
         for x, cand in zip(slice_ids, res)
@@ -708,71 +731,6 @@ class HnswGraph:
         self.norms = np.sqrt(self.norms2)
         return self
 
-    def _dist_ids(self, ids: np.ndarray, q: np.ndarray, qn2: float, qn: float) -> np.ndarray:
-        space = self.cfg.space
-        sub = self.vectors[ids]
-        dot = sub @ q
-        if space == "euclidean":
-            return np.sqrt(np.maximum(self.norms2[ids] - 2.0 * dot + qn2, 0.0))
-        if space == "cosine":
-            return np.abs(np.float32(1.0) - dot / (self.norms[ids] * qn))
-        return np.abs(sub - q).sum(axis=1, dtype=np.float32)
-
-    def search_fast(self, q: np.ndarray, k: int, ef: int | None = None):
-        """search() over the finalized representation."""
-        if self.entrypoint < 0:
-            return []
-        q = np.asarray(q, dtype=np.float32)
-        qn2 = np.float32(np.dot(q, q))
-        qn = np.float32(np.sqrt(qn2))
-        ef = max(ef or self.cfg.ef, k)
-        cur = self.entrypoint
-        cur_d = float(self._dist_ids(np.array([cur], dtype=np.int32), q, qn2, qn)[0])
-        for lvl in range(self.levels[cur], 0, -1):
-            pad = self.adj_pad.get(lvl)
-            if pad is None:
-                continue
-            while True:
-                nbrs = pad[cur]
-                nbrs = nbrs[nbrs >= 0]
-                if not len(nbrs):
-                    break
-                ds = self._dist_ids(nbrs, q, qn2, qn)
-                j = int(np.argmin(ds))
-                if ds[j] < cur_d:
-                    cur, cur_d = int(nbrs[j]), float(ds[j])
-                else:
-                    break
-        # beam on level 0 (tombstones traversable, never in results)
-        pad = self.adj_pad[0]
-        deleted = self.deleted
-        visited = np.zeros(len(self.levels), dtype=bool)
-        visited[cur] = True
-        candidates = [(cur_d, cur)]
-        results = (
-            [] if (deleted is not None and deleted[cur]) else [(-cur_d, cur)]
-        )
-        while candidates:
-            cd, c = heapq.heappop(candidates)
-            if results and len(results) >= ef and cd > -results[0][0]:
-                break
-            nbrs = pad[c]
-            nbrs = nbrs[nbrs >= 0]
-            fresh = nbrs[~visited[nbrs]]
-            if not len(fresh):
-                continue
-            visited[fresh] = True
-            ds = self._dist_ids(fresh, q, qn2, qn)
-            for n_, nd in zip(fresh.tolist(), ds.tolist()):
-                worst = -results[0][0] if len(results) >= ef else np.inf
-                if nd < worst:
-                    heapq.heappush(candidates, (nd, n_))
-                    if deleted is None or not deleted[n_]:
-                        heapq.heappush(results, (-nd, n_))
-                        if len(results) > ef:
-                            heapq.heappop(results)
-        return sorted((-nd, n_) for nd, n_ in results)[:k]
-
     def quantize(self) -> "HnswGraph":
         """Per-dimension uint8 scalar quantization of the vector matrix
         for TRAVERSAL distance evaluation (search results are reranked
@@ -862,17 +820,27 @@ class HnswGraph:
         chunk: int | None = None,
         threads: int = 1,
     ):
-        """Batched search_fast: all queries walk the graph in lock-step.
+        """Batched HNSW search: returns ``(ids, dists)``, int64 and
+        float32 arrays of shape (nq, k) in query order.  Each row holds
+        its real hits first, ascending by distance; a slot without a
+        real hit reads −1 / +inf.
 
-        Per step every live query expands its best few unexpanded beam
-        members; the whole frontier's distances are one gathered einsum
-        and beam maintenance is one argpartition — numpy work scales
-        with Σ pops · cap instead of Python-interpreter steps.  Queries
-        are chunked so the (chunk × n) visited bitmap stays bounded
-        (~200 MB) for large partitions.
+        The compiled per-query beam (`ckernel.search_level0`) serves
+        every space when the kernel loads; otherwise the lock-step NumPy
+        kernels do, where all queries walk the graph together: per step
+        every live query expands its best few unexpanded beam members,
+        the whole frontier's distances are one gathered einsum and beam
+        maintenance is one argpartition.  Queries are chunked so the
+        (chunk × n) visited bitmap stays bounded (~200 MB) for large
+        partitions.  ``threads`` > 1 fans the C kernel out over OpenMP
+        threads (driver-side callers that own the machine).
         """
-        if self.entrypoint < 0:
-            return [[] for _ in range(Q.shape[0])]
+        nq = Q.shape[0]
+        if self.entrypoint < 0 or nq == 0:
+            return (
+                np.full((nq, k), -1, dtype=np.int64),
+                np.full((nq, k), np.inf, dtype=np.float32),
+            )
         n = len(self.levels)
         if chunk is None:
             chunk = int(max(16, min(1024, 2e8 / max(n, 1))))
@@ -887,49 +855,43 @@ class HnswGraph:
             "manhattan",
         )
         has_tomb = self.deleted is not None and self.deleted.any()
-        # tombstoned graphs use the two-beam variant (deleted vertices
-        # must stay traversable without occupying result slots)
-        if has_tomb and not use_ck:
-            out = []
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(
-                    self._search_batch_chunk_tombstone(Q[s : s + chunk], k, ef)
-                )
-            return out
-        if (
-            not use_ck
-            and n * self.dim >= _QUANT_MIN_ELEMS
-            and self.cfg.space != "manhattan"
-        ):
-            # big graphs walk on uint8-quantized rows + exact rerank
-            # (the beam is scattered-gather-bound at high dimension);
-            # the C kernel reads float32 directly — exact, no rerank
-            self.quantize()
+        dele = self.deleted if has_tomb else None
+        ef = max(ef or self.cfg.ef, k)
+        Qf = np.ascontiguousarray(Q, dtype=np.float32)
+
+        def chunks(kern, order=None, **entries):
+            """NumPy kernel over query chunks (of ``order`` if given)."""
+            parts = []
+            for s in range(0, nq, chunk):
+                sel = slice(s, s + chunk) if order is None else order[s : s + chunk]
+                kw = {key: e[sel] for key, e in entries.items()}
+                parts.append(kern(Qf[sel], k, ef, **kw))
+            return tuple(np.concatenate(c) for c in zip(*parts))
+
+        if not use_ck:
+            if has_tomb:
+                # tombstoned graphs use the two-beam variant (deleted
+                # vertices must stay traversable without occupying
+                # result slots); it descends on its own
+                return chunks(self._search_batch_chunk_tombstone)
+            if n * self.dim >= _QUANT_MIN_ELEMS and self.cfg.space != "manhattan":
+                # big graphs walk on uint8-quantized rows + exact rerank
+                # (the beam is scattered-gather-bound at high dimension);
+                # the C kernel reads float32 directly — exact, no rerank
+                self.quantize()
         if n < 4096 or self._max_level() == 0:
-            if use_ck:
-                Qf = np.ascontiguousarray(Q, dtype=np.float32)
-                ent = _ck.descend(self, Qf)
-                if ent is not None:
-                    res = _ck.search_level0(
-                        self,
-                        Qf,
-                        k,
-                        max(ef or self.cfg.ef, k),
-                        ent[0],
-                        deleted=self.deleted if has_tomb else None,
-                        threads=threads,
-                    )
-                    if res is not None:
-                        return _ck_rows(res)
-            out = []
-            kern = (
+            ent = _ck.descend(self, Qf) if use_ck else None
+            if ent is not None:
+                res = _ck.search_level0(
+                    self, Qf, k, ef, ent[0], deleted=dele, threads=threads
+                )
+                if res is not None:
+                    return _mask_misses(*res)
+            return chunks(
                 self._search_batch_chunk_tombstone
                 if has_tomb
                 else self._search_batch_chunk
             )
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(kern(Q[s : s + chunk], k, ef))
-            return out
         # big graphs: seeded + locality-sorted search.  The graph's own
         # upper-level vertices are the seed set: one (q × S) GEMM against
         # a small cache-resident matrix replaces the greedy descent
@@ -938,90 +900,27 @@ class HnswGraph:
         # region of the vector matrix — the random-gather working set
         # drops from the whole matrix to a cluster's worth, which is
         # what the (bandwidth-bound) kernel actually pays for.
-        Qf = np.ascontiguousarray(Q, dtype=np.float32)
         entry, entry_d, order, inv = self._seed_entries(Qf, threads=threads)
+        res = None
         if use_ck:
             res = _ck.search_level0(
                 self,
                 np.ascontiguousarray(Qf[order]),
                 k,
-                max(ef or self.cfg.ef, k),
+                ef,
                 entry[order],
-                deleted=self.deleted if has_tomb else None,
+                deleted=dele,
                 threads=threads,
             )
-            if res is not None:
-                return _ck_rows(res, inv=inv)
-        if has_tomb:
-            # C kernel unavailable after all: two-beam NumPy fallback
-            out = []
-            for s in range(0, Q.shape[0], chunk):
-                out.extend(
-                    self._search_batch_chunk_tombstone(Q[s : s + chunk], k, ef)
-                )
-            return out
-        out_sorted = []
-        for s in range(0, Qf.shape[0], chunk):
-            sel = order[s : s + chunk]
-            out_sorted.extend(
-                self._search_batch_chunk(
-                    Qf[sel], k, ef, entry=entry[sel], entry_d=entry_d[sel]
-                )
-            )
-        return [out_sorted[inv[i]] for i in range(Qf.shape[0])]
-
-    def search_fast_batch_arrays(
-        self,
-        Q: np.ndarray,
-        k: int,
-        ef: int | None = None,
-        threads: int = 1,
-    ):
-        """Array-native variant of `search_fast_batch` for callers that
-        keep results columnar: returns ``(ids, dists)`` of shape
-        (nq, k), -1 / FLT_MAX padded (pads are a suffix), rows in query
-        order — identical neighbor sets to `search_fast_batch` (same C
-        kernel, same seeding).  Returns None when the native kernel
-        can't serve this graph (caller falls back to the tuple path);
-        the list-of-tuples conversion it skips measured ~0.19 s for a
-        10k×10 result — 3× the 32-thread kernel wall itself."""
-        from anndb_spark.operators import ckernel as _ck
-
-        if not (
-            _ck.available()
-            and self.cfg.space in ("euclidean", "cosine", "manhattan")
-        ):
-            return None
-        if self.entrypoint < 0:
-            return (
-                np.full((Q.shape[0], k), -1, dtype=np.int64),
-                np.full((Q.shape[0], k), np.float32(np.inf)),
-            )
-        has_tomb = self.deleted is not None and self.deleted.any()
-        dele = self.deleted if has_tomb else None
-        Qf = np.ascontiguousarray(Q, dtype=np.float32)
-        ef = max(ef or self.cfg.ef, k)
-        if len(self.levels) < 4096 or self._max_level() == 0:
-            ent = _ck.descend(self, Qf)
-            if ent is None:
-                return None
-            return _ck.search_level0(
-                self, Qf, k, ef, ent[0], deleted=dele, threads=threads
-            )
-        entry, entry_d, order, inv = self._seed_entries(Qf, threads=threads)
-        res = _ck.search_level0(
-            self,
-            np.ascontiguousarray(Qf[order]),
-            k,
-            ef,
-            entry[order],
-            deleted=dele,
-            threads=threads,
-        )
         if res is None:
-            return None
+            if has_tomb:
+                # C kernel unavailable after all: two-beam NumPy fallback
+                return chunks(self._search_batch_chunk_tombstone)
+            res = chunks(
+                self._search_batch_chunk, order, entry=entry, entry_d=entry_d
+            )
         ids, ds = res
-        return ids[inv], ds[inv]
+        return _mask_misses(ids[inv], ds[inv])
 
     def _seed_entries(self, Qf: np.ndarray, threads: int = 1):
         """Seed-GEMM entry selection + locality sort for a query batch:
@@ -1268,7 +1167,7 @@ class HnswGraph:
             for b in range(B):
                 sl = slice(b * cap, (b + 1) * cap)
                 f = valid[:, sl] & ~visited[a_col, safe[:, sl]]
-                visited[a_col, safe[:, sl]] |= f
+                _mark_visited(visited, a, safe[:, sl], f)
                 fresh[:, sl] = f
             rows, cols = np.nonzero(fresh)
             d = np.full(nb.shape, INF, dtype=np.float32)
@@ -1327,19 +1226,11 @@ class HnswGraph:
             beam_d = np.where(
                 np.isfinite(beam_d) & (beam_i >= 0), d_ex, np.float32(np.inf)
             )
-        out = []
-        order = np.argsort(beam_d, axis=1, kind="stable")
-        rd = np.take_along_axis(beam_d, order, axis=1)
-        ri = np.take_along_axis(beam_i, order, axis=1)
-        kk = min(k, ef)
-        for qi in range(q):
-            row = [
-                (float(rd[qi, j]), int(ri[qi, j]))
-                for j in range(kk)
-                if np.isfinite(rd[qi, j])
-            ]
-            out.append(row)
-        return out
+        order = np.argsort(beam_d, axis=1, kind="stable")[:, :k]
+        return _mask_misses(
+            np.take_along_axis(beam_i, order, axis=1),
+            np.take_along_axis(beam_d, order, axis=1),
+        )
 
     def _search_batch_chunk_tombstone(self, Q: np.ndarray, k: int, ef: int | None):
         Qf = np.ascontiguousarray(Q, dtype=np.float32)
@@ -1348,26 +1239,7 @@ class HnswGraph:
         ef = max(ef or self.cfg.ef, k)
         qn2 = np.einsum("ij,ij->i", Qf, Qf, dtype=np.float32)
         INF = np.float32(np.inf)
-        cur = np.full(q, self.entrypoint, dtype=np.int64)
-        ones = np.ones((q, 1), dtype=bool)
-        cur_d = self._dist_gather(cur[:, None], ones, Qf, qn2)[:, 0]
-        # greedy descent, levels L..1 (hill-climb in lock-step)
-        for lvl in range(int(self.levels[self.entrypoint]), 0, -1):
-            pad = self.adj_pad.get(lvl)
-            if pad is None:
-                continue
-            active = np.ones(q, dtype=bool)
-            while active.any():
-                a = np.where(active)[0]
-                nb = pad[cur[a]]
-                d = self._dist_gather(nb, nb >= 0, Qf[a], qn2[a])
-                j = d.argmin(axis=1)
-                dmin = d[np.arange(len(a)), j]
-                better = dmin < cur_d[a]
-                upd = a[better]
-                cur[upd] = nb[better, j[better]]
-                cur_d[upd] = dmin[better]
-                active[a[~better]] = False
+        cur, cur_d = self._descend_batch(Qf, qn2)
         # beam on level 0: fixed-width array beams (results + candidates);
         # tombstoned vertices feed the candidate beam (traversable — our
         # divergence; the reference skips deleted vertices outright) but
@@ -1410,7 +1282,7 @@ class HnswGraph:
             valid = nb >= 0
             safe = np.where(valid, nb, 0)
             fresh = valid & ~visited[a[:, None], safe]
-            visited[a[:, None], safe] |= fresh
+            _mark_visited(visited, a, safe, fresh)
             # distances for FRESH entries only (one flat ragged einsum) —
             # the dense (alive × cap × d) gather recomputed every visited
             # slot each step, ~10× wasted flops at high dim
@@ -1451,23 +1323,18 @@ class HnswGraph:
                 sel = np.argpartition(md, ef - 1, axis=1)[:, :ef]
                 bdst_d[a] = np.take_along_axis(md, sel, axis=1)
                 bdst_i[a] = np.take_along_axis(mi, sel, axis=1)
-        out = []
-        order = np.argsort(res_d, axis=1, kind="stable")
-        rd = np.take_along_axis(res_d, order, axis=1)
-        ri = np.take_along_axis(res_i, order, axis=1)
-        for qi in range(q):
-            row = [
-                (float(rd[qi, j]), int(ri[qi, j]))
-                for j in range(min(k, ef))
-                if np.isfinite(rd[qi, j])
-            ]
-            out.append(row)
-        return out
+        order = np.argsort(res_d, axis=1, kind="stable")[:, :k]
+        return _mask_misses(
+            np.take_along_axis(res_i, order, axis=1),
+            np.take_along_axis(res_d, order, axis=1),
+        )
 
     def search_brute(self, queries: np.ndarray, k: int):
         """Exact per-partition scoring: one blocked GEMM for all queries
         (the right physical plan when n·q·d is small — coarse partition
-        pruning plus fine brute scan, IVF-style).
+        pruning plus fine brute scan, IVF-style).  Same result contract
+        as `search_fast_batch`: ``(ids, dists)`` of shape (nq, k), real
+        hits first and ascending, −1 / +inf where a row has fewer.
 
         Allocation discipline (the r12 scatter-leg finding, PLANS r12):
         this path runs in 32 concurrent workers, and on a fault-slow
@@ -1477,8 +1344,8 @@ class HnswGraph:
         intermediates and the whole-matrix argpartition's internal
         index array were the BENCH_r11 hnsw_search_1kq 6x regression
         on byte-identical code.  So: every (q, n)-sized intermediate
-        lands in a process-level capacity buffer (`_scratch_mat` —
-        reused across graphs AND shapes), and top-k selection runs
+        lands in a thread-level capacity buffer (`_scratch.scratch_mat`
+        — reused across graphs AND shapes), and top-k selection runs
         per row (each row's introselect scratch is KBs, served from
         the malloc arena).  Row-wise argpartition is the same
         introselect numpy applies per row under axis=1, and the
@@ -1488,12 +1355,14 @@ class HnswGraph:
         (pytest-pinned)."""
         v = self.vectors
         n = v.shape[0]
-        if n == 0:
-            return [[] for _ in range(queries.shape[0])]
-        k = min(k, n)
-        space = self.cfg.space
         nq = queries.shape[0]
-        d = _scratch_mat("brute_d", nq, n)
+        ids_k = np.full((nq, k), -1, dtype=np.int64)
+        d_k = np.full((nq, k), np.inf, dtype=np.float32)
+        if n == 0:
+            return ids_k, d_k
+        kk = min(k, n)
+        space = self.cfg.space
+        d = scratch_mat("brute_d", nq, n)
         if space == "manhattan":
             # blocked |x-y| sum through a reused cube buffer: the old
             # broadcast form materialized a fresh (q, n, dim) cube
@@ -1504,7 +1373,7 @@ class HnswGraph:
             step = max(1, int(2_000_000 // max(n * dim, 1)))
             for s in range(0, nq, step):
                 e = min(s + step, nq)
-                cube = _scratch_mat(
+                cube = scratch_mat(
                     "brute_cube", (e - s) * n, dim
                 ).reshape(e - s, n, dim)
                 np.subtract(queries[s:e, None, :], v[None, :, :], out=cube)
@@ -1526,24 +1395,19 @@ class HnswGraph:
                 # the norm product must stay ONE multiply (splitting
                 # into two in-place divisions would change rounding);
                 # it gets its own reused buffer
-                prod = _scratch_mat("brute_prod", nq, n)
+                prod = scratch_mat("brute_prod", nq, n)
                 np.multiply(self.norms[None, :], qn[:, None], out=prod)
                 d /= prod
                 np.subtract(np.float32(1.0), d, out=d)
                 np.abs(d, out=d)
         if self.deleted is not None:
             d[:, self.deleted] = np.inf  # tombstones never score
-        out = []
-        for qi in range(nq):
-            row = d[qi]
-            ids = np.argpartition(row, k - 1)[:k]
-            ds = row[ids]
-            order = np.argsort(ds, kind="stable")
-            keep = np.isfinite(ds[order])
-            out.append(
-                list(zip(ds[order][keep].tolist(), ids[order][keep].tolist()))
-            )
-        return out
+        part = argpart_rows(d, kk)
+        ds = np.take_along_axis(d, part, axis=1)
+        order = np.argsort(ds, axis=1, kind="stable")
+        ids_k[:, :kk] = np.take_along_axis(part, order, axis=1)
+        d_k[:, :kk] = np.take_along_axis(ds, order, axis=1)
+        return _mask_misses(ids_k, d_k)
 
     # -- growth from a batch -------------------------------------------
     @classmethod
@@ -1847,7 +1711,7 @@ class HnswGraph:
         def cand_work(slice_ids: list[int]):
             """Candidate beams + level-0 neighbor selection for a wave
             slice (read-only on the pre-wave graph)."""
-            res = g.search_fast_batch(v[slice_ids], k=efc, ef=efc)
+            res = _hit_lists(*g.search_fast_batch(v[slice_ids], k=efc, ef=efc))
             return [
                 (x, g._select_neighbors(cand, g.cfg.m, 0, v[x]))
                 for x, cand in zip(slice_ids, res)
@@ -2070,16 +1934,7 @@ class HnswGraph:
                     if ck_commit is not None:
                         sel_wave = r[0]  # int32 (nw, m) straight to C
                     else:
-                        sel_ids, sel_d = r
-                        idl, dl = sel_ids.tolist(), sel_d.tolist()
-                        nbrs0 = {
-                            x: [
-                                (d, nid)
-                                for d, nid in zip(drow, irow)
-                                if nid >= 0
-                            ]
-                            for x, drow, irow in zip(ids, dl, idl)
-                        }
+                        nbrs0 = dict(zip(ids, _hit_lists(*r)))
                 elif ck_commit is not None:
                     # kernel died mid-regime: strict-flush the C pads,
                     # restore python sets, continue on the python path
@@ -2612,14 +2467,10 @@ def _check_config(idx_pdf: pd.DataFrame, cfg: HnswConfig) -> None:
 # reconstruction once per (worker, partition), not once per batch.  The
 # analogue of the reference keeping its graphs resident in memory
 # between requests.  Keyed by caller-supplied token: the caller owns
-# versioning (pass a new token after rebuilding the index).
-#
-# Byte-capped LRU (not a row-count FIFO): pid→worker assignment is
-# effectively random per job, so over a serving session each worker
-# accumulates the graphs it has served — the cap bounds worker memory,
-# sized via ANNDB_GRAPH_CACHE_BYTES (default 1 GiB).
+# versioning (pass a new token after rebuilding the index).  The LRU
+# itself is the package's one worker cache (`_scratch.cache_get/put`,
+# byte-capped by ANNDB_GRAPH_CACHE_BYTES).
 import os as _os_mod
-import threading as _threading_mod
 
 # matrices with at least this many elements walk on uint8 codes with an
 # exact float32 rerank (ANNDB_QUANT_MIN_ELEMS=0 forces quantization, a
@@ -2631,78 +2482,13 @@ _QUANT_MIN_ELEMS = int(
     _os_mod.environ.get("ANNDB_QUANT_MIN_ELEMS", str(1 << 28))
 )
 
-_GRAPH_CACHE: dict = {}
-_GRAPH_CACHE_MAX_BYTES = int(
-    _os_mod.environ.get("ANNDB_GRAPH_CACHE_BYTES", str(1 << 30))
-)
 
-# Process-level scratch for the brute-search kernels: ONE flat
-# capacity buffer per purpose, reused across every graph and batch
-# shape (grown monotonically, exact-shape views are contiguous because
-# they reshape a flat prefix).  Fresh multi-MB allocations in the hot
-# path are the r12 scatter-leg pathology: under 32 concurrent workers
-# a first touch of fresh pages stalled for seconds at the tail
-# (p90 5.6 s / 25 MB measured, PLANS r12) while reused pages cost
-# zero.  Buffers are THREAD-local (ADVICE r12): Spark python workers
-# run one task at a time, but a driver-local serve (or an embedder
-# calling the graph from a thread pool) may enter concurrently — a
-# shared dict would hand two threads the same distance matrix.
-#
-# Memory bound (ADVICE r12): per thread, one buffer per tag (3 tags),
-# each <= max observed (nq x n x 4B) for that tag — outside the
-# ANNDB_GRAPH_CACHE_BYTES accounting.  A buffer above
-# ANNDB_SCRATCH_CAP_BYTES is released when the next request needs
-# under a quarter of it, so one outlier batch cannot pin hundreds of
-# MB for process lifetime; steady-state homogeneous batches still
-# never reallocate.
-_SCRATCH_BUFS = _threading_mod.local()
-_SCRATCH_CAP_BYTES = int(
-    _os_mod.environ.get("ANNDB_SCRATCH_CAP_BYTES", str(256 << 20))
-)
-
-
-def _scratch_mat(tag: str, rows: int, cols: int) -> np.ndarray:
-    bufs = getattr(_SCRATCH_BUFS, "bufs", None)
-    if bufs is None:
-        bufs = _SCRATCH_BUFS.bufs = {}
-    need = rows * cols
-    flat = bufs.get(tag)
-    if (
-        flat is None
-        or flat.size < need
-        or (flat.nbytes > _SCRATCH_CAP_BYTES and need * 4 < flat.size)
-    ):
-        flat = np.empty(need, dtype=np.float32)
-        bufs[tag] = flat
-    return flat[:need].reshape(rows, cols)
-
-
-def _graph_bytes(g: "HnswGraph") -> int:
-    b = g.vectors.nbytes + 16 * len(g.levels)
+def _cache_graph(key, ids, g: "HnswGraph") -> None:
+    """Put ``(ids, g)`` in the worker cache, sized by its arrays."""
+    nb = g.vectors.nbytes + 16 * len(g.levels)
     for pad in getattr(g, "adj_pad", {}).values():
-        b += pad.nbytes
-    return b
-
-
-def _cache_get(key):
-    if key is None or key not in _GRAPH_CACHE:
-        return None
-    val = _GRAPH_CACHE.pop(key)  # re-insert → LRU order
-    _GRAPH_CACHE[key] = val
-    return val[:2]
-
-
-def _cache_put(key, ids, g):
-    if key is None:
-        return
-    nb = _graph_bytes(g)
-    if nb > _GRAPH_CACHE_MAX_BYTES:
-        return
-    total = nb + sum(v[2] for v in _GRAPH_CACHE.values())
-    while total > _GRAPH_CACHE_MAX_BYTES and _GRAPH_CACHE:
-        _, _, old_nb = _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
-        total -= old_nb
-    _GRAPH_CACHE[key] = (ids, g, nb)
+        nb += pad.nbytes
+    cache_put(key, (ids, g), nb)
 
 
 # ---------------------------------------------------------------------------
@@ -3084,6 +2870,82 @@ def tombstone_stats(index: DataFrame) -> DataFrame:
     )
 
 
+def _query_batch(queries) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, matrix)`` or ``[(id, vector), ...]`` → (string query ids
+    as an object array, contiguous float32 query matrix)."""
+    if isinstance(queries, tuple):
+        # (ids, matrix) — zero-copy for large query batches
+        qids_in, qmat = queries
+        return (
+            np.array([str(q) for q in qids_in], dtype=object),
+            np.ascontiguousarray(qmat, dtype=np.float32),
+        )
+    return (
+        np.array([str(qid) for qid, _ in queries], dtype=object),
+        np.array([v for _, v in queries], dtype=np.float32),
+    )
+
+
+def _use_brute(strategy: str, n: int, n_q: int, dim: int, thr: float) -> bool:
+    """Serving strategy: 'brute' always scans exactly, 'beam' always
+    walks the graph, 'auto' scans exactly when the scan's n·|Q|·d flops
+    fall under ``thr``."""
+    return strategy == "brute" or (strategy == "auto" and n * n_q * dim <= thr)
+
+
+def _hit_cols(ids_k: np.ndarray, d_k: np.ndarray):
+    """Batch-kernel arrays (nq, k) → per-hit columns (query row, rank,
+    graph row, score).  Real hits are a row prefix, so a hit's rank is
+    its column + 1."""
+    valid = (ids_k >= 0) & np.isfinite(d_k)
+    qrow, col = np.nonzero(valid)
+    return qrow, (col + 1).astype(np.int32), ids_k[valid], d_k[valid]
+
+
+def _hits_frame(qids, ids_k, d_k, ids, g, with_metadata: bool, with_rank: bool):
+    """One graph's hits as a pandas frame: query_id, [rank,] id,
+    score[, metadata] — the result assembler of every task-side search
+    path.  ``qids`` maps query rows to query ids, ``ids`` graph rows to
+    item ids."""
+    qrow, rank, nid, score = _hit_cols(ids_k, d_k)
+    data = {"query_id": qids[qrow]}
+    if with_rank:
+        data["rank"] = rank
+    data["id"] = np.asarray(ids, dtype=object)[nid]
+    data["score"] = score
+    if with_metadata:
+        meta = g.item_meta
+        data["metadata"] = (
+            [meta[i] for i in nid] if meta is not None else [None] * len(nid)
+        )
+    return pd.DataFrame(data)
+
+
+def _rows_graph(cache_token, pid, idx_pdf, cfg, vec_pdf=None):
+    """(ids, graph) for one partition's index rows — shipped to the task
+    by the plan — through the worker cache (`search_index`,
+    `search_index_routed`)."""
+    key = (cache_token, int(pid)) if cache_token is not None else None
+    hit = cache_get(key)
+    if hit is None:
+        hit = _graph_from_index(idx_pdf, cfg, vec_pdf)
+        _cache_graph(key, *hit)
+    return hit
+
+
+def _global_topk(partials: DataFrame, k: int, with_metadata: bool) -> DataFrame:
+    """Final gather over per-partition partial top-k rows: the k best
+    per query by ascending (score, id), ranked 1..k."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
+    return (
+        partials.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "id", "score", *(["metadata"] if with_metadata else []))
+    )
+
+
 def search_index(
     index: DataFrame,
     vectors: DataFrame | None,
@@ -3129,56 +2991,27 @@ def search_index(
     """
     cfg = config or get_index_config(index) or HnswConfig()
     ef = max(ef or cfg.ef, k)
-    qmat_all = np.array([v for _, v in queries], dtype=np.float32)
-    qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-    n_q = len(queries)
+    qid_arr, qmat_all = _query_batch(queries)
+    n_q = len(qid_arr)
     self_contained = "vec" in index.columns
     out_cols = ["query_id", "id", "score"] + (["metadata"] if with_metadata else [])
     out_schema = "query_id STRING, id STRING, score FLOAT" + (
         ", metadata MAP<STRING,STRING>" if with_metadata else ""
     )
 
-    def run_graph(pid, ids, g):
-        n = len(ids)
-        use_brute = strategy == "brute" or (
-            strategy == "auto" and n * n_q * g.dim <= brute_flops_threshold
-        )
-        res = g.search_brute(qmat_all, k) if use_brute else g.search_fast_batch(qmat_all, k, ef)
-        # columnar assembly (no per-hit Python tuples): |Q|·k rows/task
-        counts = [len(h) for h in res]
-        total = sum(counts)
-        nid = np.fromiter((i for h in res for _, i in h), dtype=np.int64, count=total)
-        dist = np.fromiter((d for h in res for d, _ in h), dtype=np.float32, count=total)
-        ids_arr = np.asarray(ids, dtype=object)
-        data = {
-            "query_id": np.repeat(qid_arr, counts),
-            "id": ids_arr[nid],
-            "score": dist,
-        }
-        if with_metadata:
-            meta = g.item_meta
-            data["metadata"] = (
-                [meta[i] for i in nid] if meta is not None else [None] * total
-            )
-        return pd.DataFrame(data, columns=out_cols)
-
-    def get_graph(pid, idx_pdf, vec_pdf=None):
-        key = (cache_token, int(pid)) if cache_token is not None else None
-        hit = _cache_get(key)
-        if hit is not None:
-            return hit
-        ids, g = _graph_from_index(idx_pdf, cfg, vec_pdf)
-        _cache_put(key, ids, g)
-        return ids, g
+    def run_graph(ids, g):
+        if _use_brute(strategy, len(ids), n_q, g.dim, brute_flops_threshold):
+            res = g.search_brute(qmat_all, k)
+        else:
+            res = g.search_fast_batch(qmat_all, k, ef)
+        return _hits_frame(qid_arr, *res, ids, g, with_metadata, with_rank=False)
 
     if self_contained:
 
         def search_self(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
             if not len(idx_pdf):
                 return pd.DataFrame(columns=out_cols)
-            pid = key[0]
-            ids, g = get_graph(pid, idx_pdf)
-            return run_graph(pid, ids, g)
+            return run_graph(*_rows_graph(cache_token, key[0], idx_pdf, cfg))
 
         partials = index.groupBy("partition_id").applyInPandas(
             search_self, schema=out_schema
@@ -3201,8 +3034,7 @@ def search_index(
             if not len(vec_pdf) or not len(idx_pdf):
                 return pd.DataFrame(columns=["query_id", "id", "score"])
             pid = int(vec_pdf["partition_id"].iloc[0])
-            ids, g = get_graph(pid, idx_pdf, vec_pdf)
-            return run_graph(pid, ids, g)
+            return run_graph(*_rows_graph(cache_token, pid, idx_pdf, cfg, vec_pdf))
 
         cogrouped = vsrc.groupBy("partition_id").cogroup(
             index.groupBy("partition_id")
@@ -3211,14 +3043,7 @@ def search_index(
             search_one, schema="query_id STRING, id STRING, score FLOAT"
         )
     # global gather: top-k per query over the partition partials
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
+    return _global_topk(partials, k, with_metadata)
 
 
 def _serve_single_graph_local(
@@ -3248,102 +3073,38 @@ def _serve_single_graph_local(
     (`cmd/benchmark/ann-benchmark/main.go:279-307`) — so the facade
     answers in-process through the same graph kernel the workers run
     (`HnswGraph.search_fast_batch` -> `ckernel.hnsw_search_level0_mt`
-    with an OpenMP thread per core), reusing the same process-local L1 /
-    host-shared shm L2 caches the task path populates (and publishing to
-    them, so a later multi-partition job finds the graph warm).
+    with an OpenMP thread per core).  The graph comes from the task
+    path's own ladder (`_acquire_partition_graph`: process-local L1 →
+    host-shared shm L2 → parquet, publishing to both), asked about a
+    chunk of ``chunk_q`` queries, so both paths make the same
+    brute/beam choice by construction.
 
     Multi-partition / routed indexes never take this path: there the
     graphs live on executors by design and the task plan is the scale
     path.  Results are bit-identical to the task path (same kernel, same
     per-chunk brute/beam resolution) — pytest-enforced.
     """
-    from anndb_spark.sources import fsutil as _fsu
-
-    full_key = (
-        (cache_token, index_ver, pid) if cache_token is not None else None
-    )
-    hit = _cache_get(full_key)
-    if hit is None and full_key is not None:
-        d = _shm_dir_for(full_key)
-        if d is not None:
-            got = _shm_load(d, cfg)
-            if got is not None:
-                _cache_put(full_key, *got)
-                hit = got
-    if hit is not None:
-        ids, g = hit
-    else:
-        idx_pdf = _fsu.read_parquet_dir(
-            _fsu.join(path, f"partition_id={pid}")
-        ).to_pandas()
-        ids, g = _graph_from_index(idx_pdf, cfg)
-        if full_key is not None:
-            d = _shm_store(full_key, ids, g)
-            if d is not None:
-                got = _shm_load(d, cfg)
-                if got is not None:
-                    ids, g = got
-            _cache_put(full_key, ids, g)
-    # brute/beam resolution must match the task path, which decides per
-    # query-chunk of (at most) queries_per_task rows — use the same
-    # chunk size so "auto" lands on the same strategy
-    use_brute = strategy == "brute" or (
-        strategy == "auto"
-        and len(ids) * min(chunk_q, qmat.shape[0]) * g.dim
-        <= brute_flops_threshold
+    ids, g, use_brute = _acquire_partition_graph(
+        path, pid, cfg, strategy, brute_flops_threshold, cache_token,
+        index_ver, chunk_q,
     )
     if use_brute and len(ids) * qmat.shape[0] * g.dim > local_brute_flops_max:
         # a big exact scan is COMPUTE-bound, not launch-bound — the
         # task plan chunks it across workers (32-way BLAS) while the
         # driver's BLAS is pinned to one thread.  Local serving exists
         # for the beam case, whose OpenMP kernel owns the machine;
-        # return None → caller runs the Spark plan (the graph just
-        # loaded stays cached for it via shm).
+        # return None → caller runs the Spark plan.
         return None
-    threads = _os_mod.cpu_count() or 1
-    nq = qmat.shape[0]
-    if not use_brute:
-        arr = g.search_fast_batch_arrays(qmat, k, ef, threads=threads)
-        if arr is not None:
-            # columnar end-to-end: no per-hit python tuples anywhere
-            ids_k, d_k = arr
-            valid = ids_k >= 0  # pads are a row suffix → ranks are col+1
-            counts_v = valid.sum(axis=1)
-            nid = ids_k[valid]
-            rank = np.broadcast_to(
-                np.arange(1, ids_k.shape[1] + 1, dtype=np.int32),
-                ids_k.shape,
-            )[valid]
-            qidx = np.repeat(np.arange(nq, dtype=np.int64), counts_v)
-            return _local_result_table(
-                qidx, qid_arr, rank, nid, d_k[valid], g, ids, with_metadata,
-            )
-    res = (
-        g.search_brute(qmat, k)
-        if use_brute
-        else g.search_fast_batch(qmat, k, ef, threads=threads)
-    )
-    counts = [len(h) for h in res]
-    total = sum(counts)
-    nid = np.fromiter(
-        (i for h in res for _, i in h), dtype=np.int64, count=total
-    )
-    dist = np.fromiter(
-        (d for h in res for d, _ in h), dtype=np.float32, count=total
-    )
-    rank = (
-        np.concatenate([np.arange(1, c + 1, dtype=np.int32) for c in counts])
-        if total
-        else np.empty(0, dtype=np.int32)
-    )
-    qidx = np.repeat(np.arange(nq, dtype=np.int64), counts)
-    return _local_result_table(
-        qidx, qid_arr, rank, nid, dist, g, ids, with_metadata,
-    )
+    if use_brute:
+        res = g.search_brute(qmat, k)
+    else:
+        res = g.search_fast_batch(qmat, k, ef, threads=_os_mod.cpu_count() or 1)
+    return _local_result_table(qid_arr, *res, g, ids, with_metadata)
 
 
-def _local_result_table(qidx, qid_arr, rank, nid, score, g, ids, with_metadata):
-    """Assemble local-serving results as an Arrow table.
+def _local_result_table(qid_arr, ids_k, d_k, g, ids, with_metadata):
+    """Assemble local-serving results (batch-kernel arrays) as an Arrow
+    table: query_id, rank, id, score[, metadata].
 
     Arrow end-to-end is the cheap half of the driver↔JVM hop:
     `createDataFrame(pa.Table)` skips the pandas→Arrow conversion AND
@@ -3360,6 +3121,7 @@ def _local_result_table(qidx, qid_arr, rank, nid, score, g, ids, with_metadata):
     """
     import pyarrow as pa
 
+    qidx, rank, nid, score = _hit_cols(ids_k, d_k)
     pa_ids = getattr(g, "_pa_ids", None)
     if pa_ids is None or len(pa_ids) != len(ids):
         pa_ids = pa.array(ids, type=pa.string())
@@ -3403,7 +3165,8 @@ def _acquire_partition_graph(
     /dev/shm mmap — one physical page set for every worker on the host)
     → parquet read.  Returns (ids, graph, use_brute) where use_brute
     reflects the auto-strategy flops test for a batch of ``n_sub``
-    queries.  Shared by the batch serving task (`search_index_path`) and
+    queries.  Shared by the batch serving task (`search_index_path`),
+    driver-local single-graph serving (`_serve_single_graph_local`) and
     the streaming query transform (`streaming.search`)."""
     from anndb_spark.sources import fsutil as _fsu
 
@@ -3412,22 +3175,19 @@ def _acquire_partition_graph(
     full_key = (
         (cache_token, index_ver, pid) if cache_token is not None else None
     )
-    hit = _cache_get(full_key)
+    hit = cache_get(full_key)
     if hit is None and full_key is not None:
         d = _shm_dir_for(full_key)
         if d is not None:
             got = _shm_load(d, cfg)
             if got is not None:
-                _cache_put(full_key, *got)
+                _cache_graph(full_key, *got)
                 hit = got
-    use_brute = strategy == "brute"
     if hit is not None:
         ids, g = hit
-        use_brute = use_brute or (
-            strategy == "auto"
-            and len(ids) * n_sub * g.dim <= brute_flops_threshold
+        return ids, g, _use_brute(
+            strategy, len(ids), n_sub, g.dim, brute_flops_threshold
         )
-        return ids, g, use_brute
     bkey = (
         (cache_token, index_ver, pid, "brute")
         if cache_token is not None
@@ -3444,13 +3204,10 @@ def _acquire_partition_graph(
     # at 1.3 s on the same boots).  A cached brute graph carries the
     # same (n, dim) the auto-threshold test needs; if auto resolves to
     # beam for this batch size, fall through to the full read.
-    bhit = _cache_get(bkey)
+    bhit = cache_get(bkey)
     if bhit is not None:
         ids, g = bhit
-        if use_brute or (
-            strategy == "auto"
-            and len(ids) * n_sub * g.dim <= brute_flops_threshold
-        ):
+        if _use_brute(strategy, len(ids), n_sub, g.dim, brute_flops_threshold):
             return ids, g, True
     idx_pdf = _fsu.read_parquet_dir(
         _fsu.join(path, f"partition_id={pid}")
@@ -3461,13 +3218,10 @@ def _acquire_partition_graph(
         if n_vert
         else 0
     )
-    use_brute = use_brute or (
-        strategy == "auto"
-        and n_vert * n_sub * dim <= brute_flops_threshold
-    )
+    use_brute = _use_brute(strategy, n_vert, n_sub, dim, brute_flops_threshold)
     if use_brute:
         ids, g = _graph_from_index(idx_pdf, cfg, need_adj=False)
-        _cache_put(bkey, ids, g)
+        _cache_graph(bkey, ids, g)
     else:
         ids, g = _graph_from_index(idx_pdf, cfg)
         if full_key is not None:
@@ -3478,7 +3232,7 @@ def _acquire_partition_graph(
                 got = _shm_load(d, cfg)
                 if got is not None:
                     ids, g = got
-        _cache_put(full_key, ids, g)
+        _cache_graph(full_key, ids, g)
     return ids, g, use_brute
 
 
@@ -3546,24 +3300,13 @@ def search_index_path(
     index_ver = (
         fsutil.index_fingerprint(path) if cache_token is not None else None
     )
-    if isinstance(queries, tuple):
-        # (ids, matrix) — zero-copy for large query batches
-        qids_in, qmat = queries
-        qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-        qmat = np.ascontiguousarray(qmat, dtype=np.float32)
-    else:
-        qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-        qmat = np.array([v for _, v in queries], dtype=np.float32)
+    if local_mode not in ("auto", "off"):
+        raise ValueError(f"local_mode must be 'auto' or 'off', not {local_mode!r}")
+    qid_arr, qmat = _query_batch(queries)
     _local_ok = (
         len(all_pids) == 1
         and (centroids is None or nprobe <= 0)
-        and (
-            local_mode == "force"
-            or (
-                local_mode == "auto"
-                and _os_mod.environ.get("ANNDB_LOCAL_SERVE", "1") != "0"
-            )
-        )
+        and local_mode == "auto"
     )
     if (
         locality_centroids is not None
@@ -3604,10 +3347,6 @@ def search_index_path(
     # serving fast path (the reference benchmark's one-resident-graph
     # shape, cmd/benchmark/ann-benchmark/main.go:279-307)
     single_graph = len(pids) == 1 and by_pid is None
-    rank_cols = ["rank"] if single_graph else []
-    out_cols = ["query_id", *rank_cols, "id", "score"] + (
-        ["metadata"] if with_metadata else []
-    )
     out_schema = (
         "query_id STRING, "
         + ("rank INT, " if single_graph else "")
@@ -3637,8 +3376,8 @@ def search_index_path(
     # ONE-graph indexes skip Spark entirely when allowed: the per-job
     # fixed wall dwarfs the compiled kernel at any realistic batch size
     # (see _serve_single_graph_local).  `local_mode`: "auto" (on for
-    # single-graph, overridable via ANNDB_LOCAL_SERVE=0), "force",
-    # "off" (always run the task plan — pytest parity uses this).
+    # single-graph) or "off" (always run the task plan — pytest parity
+    # uses this).
     if _local_ok and single_graph and n_q > 0:
         tbl = _serve_single_graph_local(
             spark, path, pids[0], qid_arr, qmat, k, ef, cfg, strategy,
@@ -3682,76 +3421,22 @@ def search_index_path(
                 qsel = by_pid.get(int(pid), [])[chunk * qpt : (chunk + 1) * qpt]
             if not qsel:
                 continue
-            sub, sub_qids = qmat[qsel], qid_arr[qsel]
+            sub = qmat[qsel]
             ids, g, use_brute = _acquire_partition_graph(
                 path, pid, cfg, strategy, brute_flops_threshold,
                 cache_token, index_ver, sub.shape[0],
             )
-            arr = (
-                None if use_brute else g.search_fast_batch_arrays(sub, k, ef)
+            res = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
+            # single graph: hits are final and ascending, so their
+            # positional ranks are the answer's ranks
+            yield _hits_frame(
+                qid_arr[qsel], *res, ids, g, with_metadata, with_rank=single_graph
             )
-            if arr is not None:
-                # columnar end-to-end: same C kernel as the tuple path,
-                # minus the per-hit python tuples (~0.19 s per 10k×10
-                # result, measured — often more than the walk itself)
-                ids_k, d_k = arr
-                valid = ids_k >= 0  # pads are a row suffix
-                counts = valid.sum(axis=1)
-                nid = ids_k[valid]
-                total = int(counts.sum())
-                dist = d_k[valid]
-                rank_full = np.broadcast_to(
-                    np.arange(1, ids_k.shape[1] + 1, dtype=np.int32),
-                    ids_k.shape,
-                )[valid]
-            else:
-                res = (
-                    g.search_brute(sub, k)
-                    if use_brute
-                    else g.search_fast_batch(sub, k, ef)
-                )
-                counts = [len(h) for h in res]
-                total = sum(counts)
-                nid = np.fromiter(
-                    (i for h in res for _, i in h), dtype=np.int64, count=total
-                )
-                dist = np.fromiter(
-                    (d for h in res for d, _ in h), dtype=np.float32, count=total
-                )
-                rank_full = (
-                    np.concatenate(
-                        [np.arange(1, c + 1, dtype=np.int32) for c in counts]
-                    )
-                    if total
-                    else np.empty(0, dtype=np.int32)
-                )
-            ids_arr = np.asarray(ids, dtype=object)
-            data = {
-                "query_id": np.repeat(sub_qids, counts),
-                "id": ids_arr[nid],
-                "score": dist,
-            }
-            if single_graph:
-                # hit lists are ascending → positional ranks are final
-                data["rank"] = rank_full
-            if with_metadata:
-                meta = g.item_meta
-                data["metadata"] = (
-                    [meta[i] for i in nid] if meta is not None else [None] * total
-                )
-            yield pd.DataFrame(data, columns=out_cols)
 
     partials = plan.mapInPandas(run, schema=out_schema)
     if single_graph:
         return partials
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
+    return _global_topk(partials, k, with_metadata)
 
 
 def search_index_local(
@@ -3801,13 +3486,7 @@ def search_index_local(
         index_ver = (
             fsutil.index_fingerprint(path) if cache_token is not None else None
         )
-        if isinstance(queries, tuple):
-            qids_in, qmat = queries
-            qid_arr = np.array([str(q) for q in qids_in], dtype=object)
-            qmat = np.ascontiguousarray(qmat, dtype=np.float32)
-        else:
-            qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
-            qmat = np.array([v for _, v in queries], dtype=np.float32)
+        qid_arr, qmat = _query_batch(queries)
         n_q = qmat.shape[0]
         chunk_q = min(queries_per_task or n_q, n_q) or 1
         tbl = _serve_single_graph_local(
@@ -3894,11 +3573,10 @@ def search_index_broadcast(
         for pdf in pdfs:
             qmat = np.array(pdf["query_vector"].tolist(), dtype=np.float32)
             res = g_l.search_fast_batch(qmat, k, ef)
-            out = []
-            for qid, hits in zip(pdf["query_id"], res):
-                for rank, (d, nid) in enumerate(hits, 1):
-                    out.append((qid, rank, ids_l[nid], float(d)))
-            yield pd.DataFrame(out, columns=["query_id", "rank", "id", "score"])
+            yield _hits_frame(
+                pdf["query_id"].to_numpy(dtype=object), *res, ids_l, g_l,
+                with_metadata=False, with_rank=True,
+            )
 
     return qdf.mapInPandas(run, schema="query_id STRING, rank INT, id STRING, score FLOAT")
 
@@ -3942,8 +3620,7 @@ def search_index_routed(
     ef = max(ef or cfg.ef, k)
     cent = np.ascontiguousarray(centroids, dtype=np.float64)
     nprobe = min(nprobe, cent.shape[0])
-    qids = [qid for qid, _ in queries]
-    qmat = np.array([v for _, v in queries], dtype=np.float32)
+    qid_str, qmat = _query_batch(queries)
     d = _pairwise(qmat.astype(np.float64), cent, cfg.space)
     probes = np.argpartition(d, min(nprobe - 1, d.shape[1] - 1), axis=1)[:, :nprobe]
     by_pid: dict[int, list[int]] = {}
@@ -3957,53 +3634,24 @@ def search_index_routed(
     out_schema = "query_id STRING, id STRING, score FLOAT" + (
         ", metadata MAP<STRING,STRING>" if with_metadata else ""
     )
-    qid_str = np.array([str(q) for q in qids], dtype=object)
 
     def search_part(key, idx_pdf: pd.DataFrame) -> pd.DataFrame:
         pid = int(key[0])
         qsel = by_pid.get(pid)
         if not qsel or not len(idx_pdf):
             return pd.DataFrame(columns=out_cols)
-        ckey = (cache_token, pid) if cache_token is not None else None
-        hit = _cache_get(ckey)
-        if hit is not None:
-            ids, g = hit
-        else:
-            ids, g = _graph_from_index(idx_pdf, cfg)
-            _cache_put(ckey, ids, g)
+        ids, g = _rows_graph(cache_token, pid, idx_pdf, cfg)
         sub = qmat[qsel]
-        use_brute = strategy == "brute" or (
-            strategy == "auto" and len(ids) * len(qsel) * g.dim <= brute_flops_threshold
-        )
-        res = g.search_brute(sub, k) if use_brute else g.search_fast_batch(sub, k, ef)
-        counts = [len(h) for h in res]
-        total = sum(counts)
-        nid = np.fromiter((i for h in res for _, i in h), dtype=np.int64, count=total)
-        dist = np.fromiter((d for h in res for d, _ in h), dtype=np.float32, count=total)
-        ids_arr = np.asarray(ids, dtype=object)
-        data = {
-            "query_id": np.repeat(qid_str[qsel], counts),
-            "id": ids_arr[nid],
-            "score": dist,
-        }
-        if with_metadata:
-            meta = g.item_meta
-            data["metadata"] = (
-                [meta[i] for i in nid] if meta is not None else [None] * total
-            )
-        return pd.DataFrame(data, columns=out_cols)
+        if _use_brute(strategy, len(ids), len(qsel), g.dim, brute_flops_threshold):
+            res = g.search_brute(sub, k)
+        else:
+            res = g.search_fast_batch(sub, k, ef)
+        return _hits_frame(qid_str[qsel], *res, ids, g, with_metadata, with_rank=False)
 
     partials = pruned.groupBy("partition_id").applyInPandas(
         search_part, schema=out_schema
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "score", *out_cols[3:])
-    )
+    return _global_topk(partials, k, with_metadata)
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,6 @@ partition pruning.  Both sit on the same exact-kNN semantic core
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -39,6 +38,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
+
+from anndb_spark.operators._scratch import (
+    argpart_rows,
+    cache_get,
+    cache_put,
+    scratch_mat,
+)
 
 __all__ = [
     "train_centroids",
@@ -49,83 +55,8 @@ __all__ = [
     "search_ivf_path",
 ]
 
-# worker-resident cluster matrices for the serving path (same contract
-# as the HNSW graph cache: byte-capped LRU in the reused python worker)
-_CLUSTER_CACHE: dict = {}
-_CLUSTER_CACHE_MAX_BYTES = int(
-    os.environ.get("ANNDB_CLUSTER_CACHE_BYTES", str(1 << 30))
-)
-
-
-def _ccache_get(key):
-    if key is None or key not in _CLUSTER_CACHE:
-        return None
-    val = _CLUSTER_CACHE.pop(key)
-    _CLUSTER_CACHE[key] = val
-    return val[:2]
-
-
-def _ccache_put(key, ids, mat):
-    if key is None:
-        return
-    nb = mat.nbytes + 64 * len(ids)
-    if nb > _CLUSTER_CACHE_MAX_BYTES:
-        return
-    total = nb + sum(v[2] for v in _CLUSTER_CACHE.values())
-    while total > _CLUSTER_CACHE_MAX_BYTES and _CLUSTER_CACHE:
-        _, _, old = _CLUSTER_CACHE.pop(next(iter(_CLUSTER_CACHE)))
-        total -= old
-    _CLUSTER_CACHE[key] = (ids, mat, nb)
-
-
 def _as_matrix(series: pd.Series) -> np.ndarray:
     return np.array(series.tolist(), dtype=np.float64)
-
-
-# Thread-local scratch for the scoring kernels — the same allocation
-# discipline as hnsw._scratch_mat (PLANS r12): a fresh multi-MB
-# allocation per call in a 32-way-concurrent Arrow worker path is a
-# latent 100x first-touch tail on fault-slow hosts (measured p90 5.6 s
-# per 25 MB there), while reused pages cost zero.  One flat float64
-# capacity buffer per tag per thread, grown monotonically, released
-# when it exceeds ANNDB_SCRATCH_CAP_BYTES and the next request needs
-# under a quarter of it.
-_SCRATCH = __import__("threading").local()
-_SCRATCH_CAP_BYTES = int(
-    os.environ.get("ANNDB_SCRATCH_CAP_BYTES", str(256 << 20))
-)
-
-
-def _scratch_mat64(tag: str, rows: int, cols: int) -> np.ndarray:
-    bufs = getattr(_SCRATCH, "bufs", None)
-    if bufs is None:
-        bufs = _SCRATCH.bufs = {}
-    need = rows * cols
-    flat = bufs.get(tag)
-    if (
-        flat is None
-        or flat.size < need
-        or (flat.nbytes > _SCRATCH_CAP_BYTES and need * 4 < flat.size)
-    ):
-        flat = np.empty(need, dtype=np.float64)
-        bufs[tag] = flat
-    return flat[:need].reshape(rows, cols)
-
-
-def _argpart_rows(d: np.ndarray, kk: int) -> np.ndarray:
-    """Row-wise top-kk argpartition: (|Q|, kk) int64 indices.
-
-    Identical selection + tie behavior to
-    ``np.argpartition(d, kk-1, axis=1)[:, :kk]`` (axis=1 runs the same
-    introselect per row), but the per-row form's internal scratch is a
-    KB-scale arena allocation instead of the HIDDEN fresh (|Q|, n)
-    int64 index matrix the whole-matrix call builds — the single
-    largest fault demand of the r12 scatter-leg pathology
-    (hnsw.search_brute carries the same fix)."""
-    part = np.empty((d.shape[0], kk), dtype=np.int64)
-    for qi in range(d.shape[0]):
-        part[qi] = np.argpartition(d[qi], kk - 1)[:kk]
-    return part
 
 
 def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarray:
@@ -141,12 +72,12 @@ def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarra
     queries = np.ascontiguousarray(queries, dtype=np.float64)
     vectors = np.ascontiguousarray(vectors, dtype=np.float64)
     nq, n = queries.shape[0], vectors.shape[0]
-    out = _scratch_mat64("ivf_pw_out", nq, n)
+    out = scratch_mat("ivf_pw_out", nq, n, np.float64)
     if space == "manhattan":
         # blocked |x-y| sum through a reused (n, d) diff buffer: per-row
         # blocking leaves per-element sums unchanged
         dim = vectors.shape[1]
-        diff = _scratch_mat64("ivf_pw_diff", n, dim)
+        diff = scratch_mat("ivf_pw_diff", n, dim, np.float64)
         for i, q in enumerate(queries):
             np.subtract(vectors, q, out=diff)
             np.abs(diff, out=diff)
@@ -168,7 +99,7 @@ def _pairwise(queries: np.ndarray, vectors: np.ndarray, space: str) -> np.ndarra
         vn = np.sqrt(np.einsum("ij,ij->i", vectors, vectors))
         # the norm product stays ONE multiply (two in-place divisions
         # would change rounding); it gets its own reused buffer
-        prod = _scratch_mat64("ivf_pw_prod", nq, n)
+        prod = scratch_mat("ivf_pw_prod", nq, n, np.float64)
         np.multiply(qn[:, None], vn[None, :], out=prod)
         out /= prod
         np.subtract(1.0, out, out=out)
@@ -280,7 +211,7 @@ def route_queries(
             if not len(pdf):
                 continue
             d = _pairwise(_as_matrix(pdf[query_vec_col]), cent, space)
-            probes = _argpart_rows(d, nprobe)
+            probes = argpart_rows(d, nprobe)
             rep = pdf.loc[pdf.index.repeat(nprobe)].reset_index(drop=True)
             rep["cluster_id"] = probes.reshape(-1).astype(np.int32)
             yield rep
@@ -358,7 +289,7 @@ def search_ivf(
         qmat = _as_matrix(q_pdf["query_vector"])
         d = _pairwise(qmat, vmat, space)
         kk = min(k, vmat.shape[0])
-        part = _argpart_rows(d, kk)
+        part = argpart_rows(d, kk)
         sel = part.reshape(-1)
         ids = vec_pdf["id"].to_numpy()
         qids = q_pdf["query_id"].to_numpy()
@@ -424,14 +355,12 @@ def search_ivf_path(
     the worker-cached cluster matrix.  A warm serving workload pays zero
     table bytes per batch — the IVF analogue of `hnsw.search_index_path`.
     """
-    import os as _os
-
     cent = np.ascontiguousarray(centroids, dtype=np.float64)
     npb = min(nprobe, cent.shape[0])
     qid_arr = np.array([str(qid) for qid, _ in queries], dtype=object)
     qmat = np.array([v for _, v in queries], dtype=np.float64)
     d = _pairwise(qmat, cent, space)
-    probes = _argpart_rows(d, min(npb, d.shape[1]))
+    probes = argpart_rows(d, min(npb, d.shape[1]))
     by_cid: dict[int, list[int]] = {}
     for qi, ps in enumerate(probes):
         for p in ps:
@@ -498,11 +427,11 @@ def search_ivf_path(
             if not qsel:
                 continue
             key = (
-                (cache_token, index_ver, int(cid))
+                ("ivf", cache_token, index_ver, int(cid))
                 if cache_token is not None
                 else None
             )
-            hit = _ccache_get(key)
+            hit = cache_get(key)
             if hit is not None:
                 ids, vmat = hit
             else:
@@ -512,12 +441,13 @@ def search_ivf_path(
                 ).to_pandas()
                 ids = tbl[id_col].to_numpy()
                 vmat = np.array(tbl[vec_col].tolist(), dtype=np.float64)
-                _ccache_put(key, ids, vmat)
+                # object ids count ~64 B each (pointer + small str)
+                cache_put(key, (ids, vmat), vmat.nbytes + 64 * len(ids))
             if not len(ids):
                 continue
             dm = _pairwise(qmat[qsel], vmat, space)
             kk = min(k, vmat.shape[0])
-            part = _argpart_rows(dm, kk)
+            part = argpart_rows(dm, kk)
             sel = part.reshape(-1)
             yield pd.DataFrame(
                 {

@@ -49,7 +49,6 @@ north-star extension built on public algorithms.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -57,7 +56,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from anndb_spark.operators._scratch import argpart_rows, scratch_mat
+from anndb_spark.operators._scratch import (
+    argpart_rows,
+    cache_get,
+    cache_put,
+    scratch_mat,
+)
 from anndb_spark.operators.pq import (
     save_pq,
     load_pq,
@@ -281,36 +285,6 @@ def load_ivfpq_config(spark, path: str) -> tuple[np.ndarray, np.ndarray, dict]:
     return cent, books, meta
 
 
-# worker-resident cell-codes cache (ids, codes matrix): byte-capped LRU
-# under the worker graph-cache budget, ANNDB_GRAPH_CACHE_BYTES (1 GiB)
-_CODES_CACHE: dict = {}
-_CODES_CACHE_MAX_BYTES = int(
-    os.environ.get("ANNDB_GRAPH_CACHE_BYTES", str(1 << 30))
-)
-
-
-def _codes_get(key):
-    v = _CODES_CACHE.pop(key, None)
-    if v is None:
-        return None
-    _CODES_CACHE[key] = v  # re-insert → LRU order
-    return v[:2]
-
-
-def _codes_put(key, ids, C):
-    if key is None:
-        return
-    # string ids are object arrays: count ~64 B each (pointer + small
-    # str), as the IVF cluster cache does
-    nb = C.nbytes + (64 if ids.dtype == object else ids.itemsize) * len(ids)
-    if nb > _CODES_CACHE_MAX_BYTES:
-        return
-    total = nb + sum(v[2] for v in _CODES_CACHE.values())
-    while total > _CODES_CACHE_MAX_BYTES and _CODES_CACHE:
-        total -= _CODES_CACHE.pop(next(iter(_CODES_CACHE)))[2]
-    _CODES_CACHE[key] = (ids, C, nb)
-
-
 def search_ivfpq(
     spark,
     path: str,
@@ -413,11 +387,11 @@ def search_ivfpq(
             if not qsel:
                 continue
             key = (
-                (cache_token, index_ver, int(cid))
+                ("ivfpq", cache_token, index_ver, int(cid))
                 if cache_token is not None
                 else None
             )
-            hit = _codes_get(key)
+            hit = cache_get(key)
             if hit is not None:
                 ids, C = hit
             else:
@@ -427,7 +401,10 @@ def search_ivfpq(
                 ).to_pandas()
                 ids = tbl["id"].to_numpy()
                 C = codes_matrix(tbl["codes"], m)
-                _codes_put(key, ids, C)
+                # string ids are object arrays: ~64 B each (pointer +
+                # small str)
+                per_id = 64 if ids.dtype == object else ids.itemsize
+                cache_put(key, (ids, C), C.nbytes + per_id * len(ids))
             if not len(ids):
                 continue
             # per-cell residual LUTs for this chunk's queries:

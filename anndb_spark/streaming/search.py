@@ -73,7 +73,7 @@ def stream_search_transform(
     )
 
     def run(batches):
-        from anndb_spark.operators.hnsw import _acquire_partition_graph
+        from anndb_spark.operators.hnsw import _acquire_partition_graph, _hits_frame
 
         # drain before yielding: interleaved yields get the python
         # worker killed instead of reused, destroying the graph cache
@@ -86,58 +86,26 @@ def stream_search_transform(
                 dtype=np.float32,
             )
             nq = qmat.shape[0]
-            cq, cid, cs = [], [], []  # candidate (qrow, id, score)
-            cm = [] if with_metadata else None
+            parts = []
             for pid in pids:
                 ids, g, use_brute = _acquire_partition_graph(
                     index_path, pid, cfg, strategy, brute_flops_threshold,
                     cache_token, index_ver, nq,
                 )
-                arr = (
-                    None
-                    if use_brute
-                    else g.search_fast_batch_arrays(qmat, k, eff_ef)
-                )
-                ids_arr = np.asarray(ids, dtype=object)
-                if arr is not None:
-                    # columnar: same kernel, no per-hit python tuples
-                    ids_k, d_k = arr
-                    valid = ids_k >= 0
-                    counts = valid.sum(axis=1)
-                    nid = ids_k[valid].astype(np.int64)
-                    total = int(counts.sum())
-                    dist = d_k[valid]
+                if use_brute:
+                    res = g.search_brute(qmat, k)
                 else:
-                    res = (
-                        g.search_brute(qmat, k)
-                        if use_brute
-                        else g.search_fast_batch(qmat, k, eff_ef)
+                    res = g.search_fast_batch(qmat, k, eff_ef)
+                # candidates keyed by batch row (query_id = row number)
+                parts.append(
+                    _hits_frame(
+                        np.arange(nq), *res, ids, g, with_metadata, with_rank=False
                     )
-                    counts = [len(h) for h in res]
-                    total = sum(counts)
-                    nid = np.fromiter(
-                        (i for h in res for _, i in h),
-                        dtype=np.int64,
-                        count=total,
-                    )
-                    dist = np.fromiter(
-                        (d for h in res for d, _ in h),
-                        dtype=np.float32,
-                        count=total,
-                    )
-                cq.append(np.repeat(np.arange(nq), counts))
-                cid.append(ids_arr[nid])
-                cs.append(dist)
-                if with_metadata:
-                    meta = g.item_meta
-                    cm.append(
-                        [meta[i] for i in nid]
-                        if meta is not None
-                        else [None] * total
-                    )
-            qrow = np.concatenate(cq)
-            rid = np.concatenate(cid)
-            score = np.concatenate(cs)
+                )
+            cand = pd.concat(parts, ignore_index=True)
+            qrow = cand["query_id"].to_numpy(dtype=np.int64)
+            rid = cand["id"].to_numpy()
+            score = cand["score"].to_numpy()
             # local final merge (O18): ascending (score, id) per query,
             # truncate to k — same order as the batch path's Window
             order = np.lexsort(
@@ -157,8 +125,8 @@ def stream_search_transform(
                 "score": score[sel],
             }
             if with_metadata:
-                flat_meta = [m for part in cm for m in part]
-                data["metadata"] = [flat_meta[i] for i in sel]
+                meta = cand["metadata"].tolist()
+                data["metadata"] = [meta[i] for i in sel]
             yield pd.DataFrame(data)
 
     return queries.mapInPandas(run, schema=out_ddl)

@@ -147,8 +147,8 @@ def test_index_parquet_roundtrip(spark, spark_index, tmp_path):
 
 
 def test_batch_search_matches_single(spark):
-    """search_fast_batch must return the same result sets as the
-    sequential search_fast for every query (same beams, same order)."""
+    """search_fast_batch must return near-identical result sets to the
+    canonical single-query `search` for every query."""
     rng = np.random.default_rng(9)
     for space in ("euclidean", "cosine", "manhattan"):
         cfg = HnswConfig(m=8, ef_construction=64, space=space)
@@ -156,10 +156,10 @@ def test_batch_search_matches_single(spark):
         levels = [int(min(3, -np.log(rng.random()) / np.log(8))) for _ in range(600)]
         g = HnswGraph.build(mat, levels, cfg).finalize()
         Q = rng.normal(0, 1, (40, 24)).astype(np.float32)
-        batch = g.search_fast_batch(Q, 10, ef=40)
+        batch_ids, _ = g.search_fast_batch(Q, 10, ef=40)
         for qi in range(Q.shape[0]):
-            single = g.search_fast(Q[qi], 10, ef=40)
-            got = {n for _, n in batch[qi]}
+            single = g.search(Q[qi], 10, ef=40)
+            got = set(batch_ids[qi][batch_ids[qi] >= 0].tolist())
             want = {n for _, n in single}
             # identical beams are not guaranteed (candidate beam is
             # width-bounded in the batch kernel) but near-total overlap is
@@ -600,23 +600,19 @@ def test_quantized_traversal_exact_rerank():
     Q = centers[rng.integers(16, size=50)] + rng.normal(
         0, 0.15, (50, dim)
     ).astype(np.float32)
-    base = g.search_fast_batch(Q, 10)
+    base, _ = g.search_fast_batch(Q, 10)
     g.quantize()  # force (below the auto threshold)
-    quant = g.search_fast_batch(Q, 10)
+    quant, quant_d = g.search_fast_batch(Q, 10)
     # returned scores are exact euclidean distances, not quantized ones
     for qi in range(50):
-        for d, idx in quant[qi]:
+        for d, idx in zip(quant_d[qi], quant[qi]):
             exact = float(np.linalg.norm(mat[idx] - Q[qi]))
             assert abs(d - exact) < 1e-3
     # recall parity with the exact-walk kernel (vs brute truth)
-    truth = g.search_brute(Q, 10)
-    tsets = [set(i for _, i in row) for row in truth]
-    r_base = sum(
-        len(tsets[qi] & set(i for _, i in base[qi])) for qi in range(50)
-    )
-    r_quant = sum(
-        len(tsets[qi] & set(i for _, i in quant[qi])) for qi in range(50)
-    )
+    truth, _ = g.search_brute(Q, 10)
+    tsets = [set(row.tolist()) for row in truth]
+    r_base = sum(len(tsets[qi] & set(base[qi].tolist())) for qi in range(50))
+    r_quant = sum(len(tsets[qi] & set(quant[qi].tolist())) for qi in range(50))
     assert r_quant >= r_base - 10  # ≤2% drift allowed
 
     # mutation drops stale codes (and search still works)
@@ -624,8 +620,9 @@ def test_quantized_traversal_exact_rerank():
     assert not hasattr(g, "q_codes")
     g.insert(Q[0])
     g.finalize()
-    again = g.search_fast_batch(Q[:5], 5)
-    assert len(again) == 5 and all(len(r) == 5 for r in again)
+    again, again_d = g.search_fast_batch(Q[:5], 5)
+    assert again.shape == (5, 5) and (again >= 0).all()
+    assert np.isfinite(again_d).all()
 
 
 def test_serving_cache_tracks_index_content(spark, tmp_path):
@@ -724,19 +721,19 @@ def test_ckernel_matches_numpy_kernel():
             * cfg.level_multiplier
         ).astype(int).tolist()
         g = HnswGraph.build(mat, levels, cfg).finalize()
-        res_c = g.search_fast_batch(Q, 10, ef=80)
+        res_c, _ = g.search_fast_batch(Q, 10, ef=80)
         import anndb_spark.operators.ckernel as ck
 
         old = ck._lib
         try:
             ck._lib = None  # force the NumPy path without recompiling
-            res_np = g.search_fast_batch(Q, 10, ef=80)
+            res_np, _ = g.search_fast_batch(Q, 10, ef=80)
         finally:
             ck._lib = old
         total = 0
         for qi in range(Q.shape[0]):
-            got = {i for _, i in res_c[qi]}
-            want = {i for _, i in res_np[qi]}
+            got = set(res_c[qi][res_c[qi] >= 0].tolist())
+            want = set(res_np[qi][res_np[qi] >= 0].tolist())
             inter = len(got & want)
             assert inter >= 7, (space, qi, got, want)
             total += inter
@@ -745,15 +742,14 @@ def test_ckernel_matches_numpy_kernel():
         assert total / (10 * Q.shape[0]) >= 0.95, (space, total)
         # tombstones: C path must never return deleted ids
         g.deleted = np.zeros(n, dtype=bool)
-        g.deleted[list({i for r in res_c for _, i in r})] = True
-        res_t = g.search_fast_batch(Q, 10, ef=80)
-        for row in res_t:
-            assert all(not g.deleted[i] for _, i in row)
+        g.deleted[res_c[res_c >= 0]] = True
+        res_t, _ = g.search_fast_batch(Q, 10, ef=80)
+        assert not g.deleted[res_t[res_t >= 0]].any()
         g.deleted = None
 
 
 def test_local_serve_matches_task_path(spark, tmp_path):
-    """Driver-local single-graph serving (local_mode='force') must return
+    """Driver-local single-graph serving (local_mode='auto') must return
     exactly what the Spark task plan (local_mode='off') returns — beam,
     brute, tombstones, and metadata."""
     from anndb_spark.operators.hnsw import save_graph_partition, search_index_path
@@ -779,7 +775,7 @@ def test_local_serve_matches_task_path(spark, tmp_path):
         ).collect()
         b = search_index_path(
             spark, path, queries, 6, ef=60, config=cfg, strategy=strategy,
-            cache_token="t-local", local_mode="force",
+            cache_token="t-local", local_mode="auto",
         ).collect()
         # ids/ranks must be identical; distances only to float32 GEMM
         # reproducibility (driver BLAS may pick a different sgemm kernel
@@ -794,7 +790,7 @@ def test_local_serve_matches_task_path(spark, tmp_path):
     # the local result is a real DataFrame: column ops compose on it
     d = search_index_path(
         spark, path, queries, 6, ef=60, config=cfg, strategy="beam",
-        local_mode="force",
+        local_mode="auto",
     )
     assert d.filter(F.col("rank") == 1).count() == 30
 
@@ -865,7 +861,7 @@ def test_local_serve_metadata_single_partition(spark, tmp_path):
     queries = [("q0", rows[3][1]), ("q1", rows[40][1])]
     want = {r[0]: r[2] for r in rows}
     outs = {}
-    for lm in ("force", "off"):
+    for lm in ("auto", "off"):
         res = search_index_path(
             spark, path, queries, 5, config=cfg, with_metadata=True,
             local_mode=lm,
@@ -874,7 +870,7 @@ def test_local_serve_metadata_single_partition(spark, tmp_path):
         for r in res:
             assert r["metadata"] == want[r["id"]], lm
         outs[lm] = sorted((r["query_id"], r["rank"], r["id"]) for r in res)
-    assert outs["force"] == outs["off"]
+    assert outs["auto"] == outs["off"]
 
 
 def test_search_index_local_api(spark, tmp_path):
@@ -1009,11 +1005,10 @@ def test_build_hub_heavy_corpus_respects_caps():
         assert (tail == -1).all(), i
     g.finalize()
     Q = rng.normal(0, 0.01, (40, dim)).astype(np.float32)
-    res = g.search_fast_batch(Q, 10, ef=80)
-    truth = g.search_brute(Q, 10)
+    res, _ = g.search_fast_batch(Q, 10, ef=80)
+    truth, _ = g.search_brute(Q, 10)
     hits = sum(
-        len({i for _, i in truth[q]} & {i for _, i in res[q]})
-        for q in range(40)
+        len(set(truth[q].tolist()) & set(res[q].tolist())) for q in range(40)
     )
     assert hits / 400 >= 0.85, hits / 400
 
@@ -1067,11 +1062,11 @@ def test_built_graph_is_picklable():
     ).astype(int).tolist()
     g = HnswGraph.build(mat, levels, cfg, workers=4).finalize()
     Q = rng.normal(0, 1, (10, 24)).astype(np.float32)
-    res_before = g.search_fast_batch(Q, 5, ef=32)
+    res_before, _ = g.search_fast_batch(Q, 5, ef=32)
     g2 = pickle.loads(pickle.dumps(g))
-    res_after = g2.search_fast_batch(Q, 5, ef=32)
-    assert [{i for _, i in r} for r in res_before] == [
-        {i for _, i in r} for r in res_after
+    res_after, _ = g2.search_fast_batch(Q, 5, ef=32)
+    assert [set(r.tolist()) for r in res_before] == [
+        set(r.tolist()) for r in res_after
     ]
 
 
@@ -1146,26 +1141,26 @@ def test_search_brute_scratch_reuse_bitwise_and_unpickled():
                     - dot / (np.sqrt(norms2)[None, :] * qn[:, None])
                 )
         k = 7
-        first = g.search_brute(queries, k)
+        first_i, first_d = g.search_brute(queries, k)
         part = np.argpartition(d_ref, k - 1, axis=1)[:, :k]
         for qi in range(q):
             ids = part[qi]
             ds = d_ref[qi, ids]
             order = np.argsort(ds, kind="stable")
-            keep = np.isfinite(ds[order])
-            want = list(zip(ds[order][keep].tolist(), ids[order][keep].tolist()))
-            assert first[qi] == want, (space, qi)
-        assert g.search_brute(queries, k) == first, space  # dirty-buffer rerun
-        from anndb_spark.operators.hnsw import _SCRATCH_BUFS
+            assert (ds[order] == first_d[qi]).all(), (space, qi)
+            assert (ids[order] == first_i[qi]).all(), (space, qi)
+        again_i, again_d = g.search_brute(queries, k)  # dirty-buffer rerun
+        assert (again_i == first_i).all() and (again_d == first_d).all(), space
+        from anndb_spark.operators._scratch import _TLS
 
-        assert _SCRATCH_BUFS.bufs["brute_d"].size >= q * n  # thread scratch live
+        assert _TLS.bufs["brute_d"].size >= q * n  # thread scratch live
         state = g.__getstate__()
         assert not any(key.startswith("_ck_") for key in state)
         pickle.dumps(state)  # the shipped state stays picklable
         # tombstones: deleted ids never appear even via the reused buffer
         g.deleted = np.array([0, 1], dtype=np.int64)
-        hits = g.search_brute(queries, k)
-        assert all(i not in (0, 1) for h in hits for _, i in h)
+        hits, _ = g.search_brute(queries, k)
+        assert not np.isin(hits, [0, 1]).any()
 
 
 def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch):
@@ -1230,35 +1225,98 @@ def test_acquire_brute_graph_warm_reads_no_parquet(spark, tmp_path, monkeypatch)
     assert g4.adj_pad  # full graph carries adjacency
 
 
-def test_scratch_mat_thread_local_and_capped(monkeypatch):
-    """ADVICE r12: _SCRATCH_BUFS must be thread-local (a driver-local
-    serve or an embedder thread pool entering search_brute concurrently
-    must never share a distance matrix), and a buffer above
-    ANNDB_SCRATCH_CAP_BYTES is released when the next request needs
-    under a quarter of it (the documented memory bound)."""
-    import threading
+def _kernel_runs(g, monkeypatch):
+    """Every batch kernel over graph ``g``, by name: the C beam (when
+    the kernel compiles here), the NumPy beam (C forced off), and the
+    exact brute scan."""
+    from anndb_spark.operators import ckernel as ck
 
-    from anndb_spark.operators import hnsw as hnsw_mod
+    def numpy_beam(Q, k, ef):
+        with monkeypatch.context() as m:
+            m.setattr(ck, "_lib", None)
+            return g.search_fast_batch(Q, k, ef=ef)
 
-    backing = {}
+    runs = {
+        "numpy": numpy_beam,
+        "brute": lambda Q, k, ef: g.search_brute(Q, k),
+    }
+    if ck.available():
+        runs["c"] = lambda Q, k, ef: g.search_fast_batch(Q, k, ef=ef)
+    return runs
 
-    def work(tag):
-        m = hnsw_mod._scratch_mat("tl_test", 8, 8)
-        m[:] = float(ord(tag))
-        # hold the FLAT buffer object itself (id() of a freed buffer
-        # can be reused by the next thread's allocation)
-        backing[tag] = (hnsw_mod._SCRATCH_BUFS.bufs["tl_test"], m.copy())
 
-    threads = [threading.Thread(target=work, args=(t,)) for t in ("a", "b")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert backing["a"][0] is not backing["b"][0]  # distinct buffers
-    assert backing["a"][1][0, 0] != backing["b"][1][0, 0]
+@pytest.mark.parametrize("n", [3000, 6000])  # descend entry / seed-GEMM entry
+@pytest.mark.parametrize("space", ["euclidean", "cosine", "manhattan"])
+def test_batch_kernels_never_return_nan_row(monkeypatch, space, n):
+    """An all-NaN row must never be a hit.  The C kernel's euclidean
+    clamp used to map its NaN distance to 0.0, so it ranked FIRST for
+    about half the queries; NaN distances now read +inf in every
+    kernel, and non-finite slots are misses (−1 / +inf)."""
+    rng = np.random.default_rng(0)
+    mat = rng.normal(0, 1, (n, 32)).astype(np.float32)
+    mat[17] = np.nan
+    cfg = HnswConfig(m=16, ef_construction=100, space=space)
+    lr = np.random.default_rng(1)
+    levels = np.floor(
+        -np.log(np.clip(lr.random(n), 1e-12, 1 - 1e-12)) * cfg.level_multiplier
+    ).astype(int).tolist()
+    with np.errstate(invalid="ignore"):
+        g = HnswGraph.build(mat, levels, cfg).finalize()
+        Q = rng.normal(0, 1, (50, 32)).astype(np.float32)
+        for name, run in _kernel_runs(g, monkeypatch).items():
+            ids, ds = run(Q, 10, 40)
+            assert not (ids == 17).any(), (name, int((ids == 17).any(axis=1).sum()))
+            assert not np.isnan(ds).any(), name
+            assert (ids[:, 0] >= 0).all(), name
 
-    monkeypatch.setattr(hnsw_mod, "_SCRATCH_CAP_BYTES", 4 * 100)  # 100 elems
-    big = hnsw_mod._scratch_mat("cap_test", 20, 20)  # 400 > cap
-    small = hnsw_mod._scratch_mat("cap_test", 3, 3)  # 9*4 < 400 -> freed
-    assert hnsw_mod._SCRATCH_BUFS.bufs["cap_test"].size == 9
-    assert big.shape == (20, 20) and small.shape == (3, 3)
+
+@pytest.mark.parametrize("kernel", ["c", "numpy", "numpy_tomb", "brute"])
+@pytest.mark.parametrize("space", ["euclidean", "cosine", "manhattan"])
+def test_batch_kernel_array_contract(monkeypatch, space, kernel):
+    """Every batch kernel returns (ids int64, dists float32) of shape
+    (nq, k) in query order: real hits first, ascending, then −1 / +inf.
+    k above the live row count gives every live row, then −1; an
+    all-tombstoned graph gives only −1."""
+    from anndb_spark.operators import ckernel as ck
+
+    if kernel == "c" and not ck.available():
+        pytest.skip("no C compiler on this host")
+    rng = np.random.default_rng(3)
+    n, dim, nq = 300, 12, 9
+    mat = rng.normal(0, 1, (n, dim)).astype(np.float32)
+    cfg = HnswConfig(m=8, ef_construction=64, space=space)
+    lr = np.random.default_rng(4)
+    levels = np.floor(
+        -np.log(np.clip(lr.random(n), 1e-12, 1 - 1e-12)) * cfg.level_multiplier
+    ).astype(int).tolist()
+    g = HnswGraph.build(mat, levels, cfg).finalize()
+    if kernel in ("numpy_tomb", "brute"):
+        g.deleted = np.zeros(n, dtype=bool)
+        g.deleted[::3] = True
+    live = n - int(g.deleted.sum()) if g.deleted is not None else n
+    run = _kernel_runs(g, monkeypatch)["numpy" if kernel == "numpy_tomb" else kernel]
+    Q = rng.normal(0, 1, (nq, dim)).astype(np.float32)
+
+    for k, ef in ((10, 40), (n + 20, n + 20)):
+        ids, ds = run(Q, k, ef)
+        assert ids.shape == ds.shape == (nq, k)
+        assert ids.dtype == np.int64 and ds.dtype == np.float32
+        hit = ids >= 0
+        assert (hit == np.isfinite(ds)).all()
+        # real hits are a prefix of each row, ascending by distance
+        assert (hit[:, :-1] | ~hit[:, 1:]).all()
+        for qi in range(nq):
+            d = ds[qi][hit[qi]]
+            assert (np.diff(d) >= 0).all()
+            assert len(set(ids[qi][hit[qi]].tolist())) == hit[qi].sum()
+        assert (ds[~hit] == np.inf).all() and (ids[~hit] == -1).all()
+        if g.deleted is not None:
+            assert not g.deleted[ids[hit]].any()
+        if k > n:
+            # k above the live row count: every live row, then −1
+            assert (hit.sum(axis=1) == live).all()
+
+    g.deleted = np.ones(n, dtype=bool)
+    ids, ds = run(Q, 5, 20)
+    assert ids.shape == (nq, 5)
+    assert (ids == -1).all() and (ds == np.inf).all()

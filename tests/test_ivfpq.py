@@ -212,21 +212,28 @@ def test_ivfpq_codes_are_fixed_width_binary(spark, ivfpq_built):
 
 
 def test_codes_cache_is_byte_capped_lru(monkeypatch):
-    """The worker codes cache evicts least-recently-used cells once the
+    """The worker cache holding IVFPQ cell codes (the package's one LRU,
+    `_scratch.cache_get/put`) evicts least-recently-used cells once the
     cached ids + codes exceed the byte budget."""
-    from anndb_spark.operators import ivfpq
+    from anndb_spark.operators import _scratch
 
     ids = np.arange(100, dtype=np.int64)  # 800 B
     codes = np.zeros((100, 2), dtype=np.uint8)  # 200 B → 1,000 B a cell
-    monkeypatch.setattr(ivfpq, "_CODES_CACHE", {})
-    monkeypatch.setattr(ivfpq, "_CODES_CACHE_MAX_BYTES", 3_000)
+    nb = ids.nbytes + codes.nbytes
+    monkeypatch.setattr(_scratch, "_CACHE", {})
+    monkeypatch.setattr(_scratch, "_CACHE_MAX_BYTES", 3_000)
+
+    def key(cid):
+        return ("ivfpq", "t", "ver", cid)
+
     for cid in range(3):
-        ivfpq._codes_put(("t", cid), ids, codes)
-    assert ivfpq._codes_get(("t", 0)) is not None  # 0 becomes most recent
-    ivfpq._codes_put(("t", 3), ids, codes)
-    assert ivfpq._codes_get(("t", 1)) is None  # least recently used
-    assert all(ivfpq._codes_get(("t", c)) is not None for c in (0, 2, 3))
-    assert sum(v[2] for v in ivfpq._CODES_CACHE.values()) <= 3_000
+        _scratch.cache_put(key(cid), (ids, codes), nb)
+    assert _scratch.cache_get(key(0)) is not None  # 0 becomes most recent
+    _scratch.cache_put(key(3), (ids, codes), nb)
+    assert _scratch.cache_get(key(1)) is None  # least recently used
+    assert all(_scratch.cache_get(key(c)) is not None for c in (0, 2, 3))
+    assert sum(b for _, b in _scratch._CACHE.values()) <= 3_000
     # one entry over the whole budget is never cached
-    ivfpq._codes_put(("t", 9), np.arange(400, dtype=np.int64), codes)
-    assert ivfpq._codes_get(("t", 9)) is None
+    big = np.arange(400, dtype=np.int64)
+    _scratch.cache_put(key(9), (big, codes), big.nbytes + codes.nbytes)
+    assert _scratch.cache_get(key(9)) is None

@@ -412,10 +412,10 @@ def test_insert_many_extends_loaded_graph_kernel():
     assert len(g.levels) == n
     g.finalize()
     q = mat[1100]
-    res = g.search_fast_batch(q.reshape(1, -1), 5, 60)[0]
-    assert res[0][1] == 1100  # the freshly inserted vector finds itself
-    truth = g.search_brute(q.reshape(1, -1), 5)[0]
-    assert {i for _, i in res} == {i for _, i in truth}
+    res = g.search_fast_batch(q.reshape(1, -1), 5, 60)[0][0]
+    assert res[0] == 1100  # the freshly inserted vector finds itself
+    truth = g.search_brute(q.reshape(1, -1), 5)[0][0]
+    assert set(res.tolist()) == set(truth.tolist())
 
 
 def test_stream_maintain_ivfpq(spark, tmp_path):
